@@ -24,16 +24,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * Norms reuse it as sqrt(dot(a, a)) — again the same fold the HOF
   * version computed (acc + v*v per step).
   *
-  * Inputs must be non-null equal-length arrays with non-null elements
-  * (embeddings are fixed-dim by construction); the min-length guard only
-  * defends against malformed rows — the HOF formulation null-padded
-  * instead, which on well-formed inputs is unreachable behavior.
+  * Arrays of different lengths have no dot product: the expression is
+  * NULL for them (on the interpreted and the codegen path alike) rather
+  * than folding a silently truncated prefix. Elements must be non-null
+  * (embeddings are fixed-dim, dense by construction).
   */
 object DotFold {
 
-  /** Static entry point for generated code. */
+  /** Static entry point for generated code; callers check that the
+    * lengths are equal.
+    */
   def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -53,12 +55,20 @@ case class DotFoldExpr(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotFold.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (x.numElements() != y.numElements()) null else DotFold.compute(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.DotFold.compute($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if ($a.numElements() != $b.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.DotFold.compute($a, $b);
+         |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+
+import graft.util.Observed
 
 /** C1/C2 (SURVEY.md §2.10): transitive closure of match edges via the
   * alternating large-star / small-star algorithm (Kiveris et al.,
@@ -14,8 +16,8 @@ import org.apache.spark.sql.functions._
   * minimum, which is exactly the pipeline's canonical entity_id. Each
   * iteration is checkpointed (plan truncation — iterative self-joins
   * otherwise grow the lineage exponentially, SURVEY.md §4.2) and the
-  * fixpoint test is a cheap (count, hash-sum) signature, not a full
-  * except().
+  * fixpoint test is a cheap (count, hash-XOR) signature, observed on the
+  * checkpoint write itself, not a full except().
   */
 object ConnectedComponents {
 
@@ -23,7 +25,9 @@ object ConnectedComponents {
     * @param allNodes   single-column node universe (for singleton labels)
     * @param checkpoint lineage-truncation hook: localCheckpoint for
     *                   in-memory runs, a durable parquet write-read for
-    *                   resumable pipeline runs (Pipeline wires that in)
+    *                   resumable pipeline runs (Pipeline wires that in).
+    *                   It either runs its whole input or returns an
+    *                   already-materialized equal table without running it.
     * @return labels(conv_id, entity_id = min conv_id of component)
     */
   def run(edges: DataFrame, allNodes: DataFrame, maxIter: Int = 50,
@@ -31,16 +35,26 @@ object ConnectedComponents {
         (df, _) => df.localCheckpoint(true)): DataFrame = {
 
     val spark = edges.sparkSession
-    var e = checkpoint(canonical(
+    // The fixpoint signature rides along the checkpoint as an in-band
+    // observation; only a hook that returned without running its input
+    // (a resumed checkpoint) costs a separate signature agg.
+    def step(df: DataFrame, i: Int): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val out = checkpoint(df.observe(obs, signatureExprs.head, signatureExprs.tail: _*), i)
+      val sig = Observed.completed(spark, obs)
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .getOrElse(signature(out))
+      (out, sig)
+    }
+
+    var (e, sig) = step(canonical(
       edges.select(col(edges.columns(0)).as("u"), col(edges.columns(1)).as("v"))), 0)
     var converged = false
     var iter = 0
-    var sig = signature(e)
 
     while (!converged && iter < maxIter) {
       iter += 1
-      val next = checkpoint(canonical(smallStar(largeStar(e))), iter)
-      val nextSig = signature(next)
+      val (next, nextSig) = step(canonical(smallStar(largeStar(e))), iter)
       converged = nextSig == sig
       sig = nextSig
       e = next
@@ -91,9 +105,11 @@ object ConnectedComponents {
     * trips ANSI overflow); collision probability negligible over distinct
     * edges and bounded by maxIter anyway.
     */
+  private def signatureExprs: Seq[Column] = Seq(count(lit(1)).as("edges"),
+    coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("edge_xor"))
+
   private def signature(e: DataFrame): (Long, Long) = {
-    val row = e.agg(count(lit(1)),
-      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
+    val row = e.agg(signatureExprs.head, signatureExprs.tail: _*).head()
     (row.getLong(0), row.getLong(1))
   }
 }

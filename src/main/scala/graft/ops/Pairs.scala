@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -48,9 +48,16 @@ object Pairs {
     * immediately. Callers that need durability re-write the slim
     * (a_id, b_id) output to their own checkpoint — cheap relative to
     * re-deriving the block table per consumer.
+    *
+    * @param dropped observed in-band on the sizes table before the cap
+    *                filter: (dropped_blocks, dropped_rows), the same two
+    *                numbers as `droppedBlockStats`, filled by the sizing
+    *                pass below — no extra job
     */
-  def candidatePairs(blocks: DataFrame, cfg: PairConfig = PairConfig()): DataFrame = {
-    val keptSizes = Blocking.blockSizes(blocks)
+  def candidatePairs(blocks: DataFrame, cfg: PairConfig = PairConfig(),
+      dropped: Option[Observation] = None): DataFrame = {
+    val sizes = Blocking.blockSizes(blocks)
+    val keptSizes = dropped.fold(sizes)(observeDropped(sizes, cfg, _))
       .filter(col("block_size") <= cfg.blockSizeCap)
     val sized = blocks.join(keptSizes, "bkey")
       .select(col("bkey"), col("conv_id"), col("block_size"))
@@ -102,6 +109,14 @@ object Pairs {
       .filter(col("block_size") > cfg.blockSizeCap)
       .agg(count(lit(1)).as("dropped_blocks"),
         coalesce(sum(col("block_size")), lit(0L)).as("dropped_rows"))
+
+  private def observeDropped(sizes: DataFrame, cfg: PairConfig,
+      obs: Observation): DataFrame = {
+    val over = col("block_size") > cfg.blockSizeCap
+    sizes.observe(obs,
+      count(when(over, lit(1))).as("dropped_blocks"),
+      coalesce(sum(when(over, col("block_size"))), lit(0L)).as("dropped_rows"))
+  }
 
   private def joinWithin(blocks: DataFrame): DataFrame = {
     val a = blocks.select(col("bkey"), col("conv_id").as("a_id"))

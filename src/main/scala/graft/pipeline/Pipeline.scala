@@ -2,11 +2,12 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.ParquetTableIO
 import graft.ops._
+import graft.util.Observed
 
 /** EP1′ (SURVEY.md §3.2): the flagship end-to-end ER run —
   * transcripts → collapse → features → blocks → candidate pairs →
@@ -30,7 +31,7 @@ object Pipeline {
   /** Bumped whenever a stage's semantics change: checkpoints written by
     * older code must not be resumed into newer pipelines.
     */
-  val CodeVersion = "g5"
+  val CodeVersion = "g6"
 
   /** Cheap order-independent input fingerprint: one scan, (row count,
     * XOR of row hashes — overflow-free at any scale) over the
@@ -62,16 +63,9 @@ object Pipeline {
     val io = new ParquetTableIO(cfg.checkpointRoot)
     val fp = s"${fingerprint(transcripts)}-${configFingerprint(cfg)}"
 
-    def manifestFp(stage: String): Option[String] = {
-      val p = Paths.get(cfg.checkpointRoot, stage, "_manifest.json")
-      if (!Files.exists(p)) None
-      else "\"input_fingerprint\":\"([^\"]*)\"".r
-        .findFirstMatchIn(Files.readString(p)).map(_.group(1))
-    }
-
     /** Compute-or-resume one stage. */
     def stage(name: String)(compute: => DataFrame): DataFrame =
-      if (io.exists(name) && manifestFp(name).contains(fp)) io.read(spark, name)
+      if (io.manifestInputFingerprint(name).contains(fp)) io.read(spark, name)
       else {
         io.dropFrom(name)
         io.write(compute, name, cfg.runId, fp)
@@ -104,26 +98,27 @@ object Pipeline {
       Blocking.allBlocks(records, cfg.tokenDfCap)
     }
 
-    val pairs = stage("pairs") {
-      Pairs.candidatePairs(blocks, cfg.pairCfg)
-    }
-
     // Dropped-block telemetry: capping is NEVER silent (SURVEY.md §7.4
-    // risk 2). One cheap agg over the blocks checkpoint, written beside
-    // the pairs stage and surfaced on stderr. Same marker pattern as the
-    // audit: recomputed only when the fingerprint moved, re-read (and
-    // re-warned) on every run.
-    val droppedMarker = Paths.get(cfg.checkpointRoot, "pairs", "_dropped_fp")
-    if (!(Files.exists(droppedMarker) && Files.readString(droppedMarker) == fp)) {
-      Pairs.droppedBlockStats(blocks, cfg.pairCfg).write.mode("overwrite")
-        .parquet(s"${cfg.checkpointRoot}/pairs/_dropped_blocks")
-      Files.writeString(droppedMarker, fp)
+    // risk 2). The pairs sizing pass counts the over-cap blocks in-band;
+    // the two numbers land in the pairs stage before its manifest (a
+    // kill cannot commit pairs without them) and are re-read and
+    // re-warned on every resume.
+    val droppedFile = Paths.get(cfg.checkpointRoot, "pairs", "_dropped_blocks.json")
+    val pairs = stage("pairs") {
+      val dropped = Observation()
+      val computed = Pairs.candidatePairs(blocks, cfg.pairCfg, Some(dropped))
+      val d = Observed.required(spark, dropped, "dropped-block telemetry")
+      Files.createDirectories(droppedFile.getParent)
+      Files.writeString(droppedFile,
+        s"""{"dropped_blocks":${d.getLong(0)},"dropped_rows":${d.getLong(1)}}""")
+      computed
     }
-    val dRow = spark.read
-      .parquet(s"${cfg.checkpointRoot}/pairs/_dropped_blocks").head()
-    if (dRow.getLong(0) > 0) {
-      System.err.println(s"[pipeline] dropped ${dRow.getLong(0)} oversized " +
-        s"blocks (${dRow.getLong(1)} rows) at blockSizeCap=${cfg.pairCfg.blockSizeCap}")
+    val telemetry = Files.readString(droppedFile)
+    val Seq(droppedBlocks, droppedRows) = Seq("dropped_blocks", "dropped_rows")
+      .map(k => s""""$k":(\\d+)""".r.findFirstMatchIn(telemetry).get.group(1).toLong)
+    if (droppedBlocks > 0) {
+      System.err.println(s"[pipeline] dropped $droppedBlocks oversized " +
+        s"blocks ($droppedRows rows) at blockSizeCap=${cfg.pairCfg.blockSizeCap}")
     }
 
     val scored = stage("scored") {

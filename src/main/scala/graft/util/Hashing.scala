@@ -26,14 +26,6 @@ object Hashing {
   def mix(parts: Long*): Long =
     parts.foldLeft(0x2545F4914F6CDD1DL)((acc, p) => mix64(acc ^ mix64(p)))
 
-  /** Stable string hash (not String.hashCode — too few bits). */
-  def mixStr(s: String): Long = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < s.length) { h = mix64(h ^ s.charAt(i).toLong); i += 1 }
-    h
-  }
-
   /** Uniform double in [0, 1). */
   def unit(parts: Long*): Double =
     (mix(parts: _*) >>> 11).toDouble / (1L << 53).toDouble

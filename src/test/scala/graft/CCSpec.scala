@@ -1,5 +1,9 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ConnectedComponents
@@ -61,5 +65,26 @@ class CCSpec extends AnyFunSuite {
 
       assert(cc(edges, nodes) == oracle, s"trial $trial")
     }
+  }
+
+  /** A resumed checkpoint hands back an already-materialized iteration
+    * without running the frame CC passed in, so the in-band signature
+    * never fills: CC must fall back to its own signature agg, not wait.
+    */
+  test("resumed checkpoints (hook returns a table without running its input)") {
+    val edges = Seq("b" -> "c", "a" -> "b", "d" -> "e", "f" -> "d", "c" -> "g", "g" -> "h")
+      .toDF("a_id", "b_id")
+    val nodes = Seq("a", "b", "c", "d", "e", "f", "g", "h", "s").toDF("conv_id")
+    val saved = scala.collection.mutable.Map.empty[Int, DataFrame]
+    def labels(hook: (DataFrame, Int) => DataFrame): Map[String, String] = {
+      val run = Future(ConnectedComponents.run(edges, nodes, checkpoint = hook)
+        .as[(String, String)].collect().toMap)(ExecutionContext.global)
+      Await.result(run, 3.minutes)
+    }
+    val cold = labels((df, i) => { val m = df.localCheckpoint(true); saved(i) = m; m })
+    assert(saved.size >= 3)
+    assert(labels((_, i) => saved(i)) == cold)
+    // resumed early iterations, computed later ones (a mid-clustering kill)
+    assert(labels((df, i) => if (i < 2) saved(i) else df.localCheckpoint(true)) == cold)
   }
 }

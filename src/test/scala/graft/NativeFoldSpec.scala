@@ -37,6 +37,48 @@ class NativeFoldSpec extends AnyFunSuite {
     rows.foreach { case (f, r) => assert(bits(f) == bits(r)) }
   }
 
+  /** Collects `df` with the given session confs set, then restores them. */
+  private def collectUnder[T](df: org.apache.spark.sql.Dataset[T],
+      confs: (String, String)*): Seq[T] = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try df.collect().toSeq
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("DotFold: mismatched lengths are NULL on the codegen and interpreted paths alike") {
+    val hofDot = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+      lit(0.0), (acc, v) => acc + v)
+    val input = vecs.unionByName(Seq(
+      (101L, Array(1.0, 2.0), Array(4.0, 5.0, 6.0)),
+      (102L, Array.empty[Double], Array(1.0)),
+      (103L, Array(3.0), Array.empty[Double]),
+      (104L, Array.empty[Double], Array.empty[Double])).toDF("id", "a", "b"))
+      .localCheckpoint() // a scan, so the optimizer cannot fold the projection
+    val dotted = input.select(col("id"),
+      graft.functions.DotFold.dot(col("a"), col("b")).as("dot"),
+      when(size(col("a")) === size(col("b")), hofDot).as("ref"))
+    assert(dotted.schema("dot").nullable)
+    val typed = dotted.as[(Long, Option[Double], Option[Double])]
+    val noWholeStage = "spark.sql.codegen.wholeStage" -> "false"
+    val paths = Seq(
+      "whole-stage codegen" -> collectUnder(typed),
+      "codegen projection" -> collectUnder(typed, noWholeStage,
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> collectUnder(typed, noWholeStage,
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    paths.foreach { case (path, rows) =>
+      assert(rows.size == 68, path)
+      rows.foreach { case (id, dot, ref) =>
+        if (id > 100 && id < 104) assert(dot.isEmpty, s"$path: row $id")
+        else assert(dot.map(bits) == ref.map(bits) && dot.nonEmpty, s"$path: row $id")
+      }
+    }
+  }
+
   test("Ann.cosine / cosineWithNorms are bit-identical to the HOF cosine") {
     def hofCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
       val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)

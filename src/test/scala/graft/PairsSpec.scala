@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Observation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Pairs
-import graft.util.Hashing
+import graft.util.{Hashing, Observed}
 
 class PairsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -23,10 +24,15 @@ class PairsSpec extends AnyFunSuite {
     val big = (0 until 30).map(i => ("hot", f"c$i%02d")) :+ (("ok", "a")) :+ (("ok", "b"))
     val blocks = big.toDF("bkey", "conv_id")
     val cfg = Pairs.PairConfig(blockSizeCap = 10, hotThreshold = 5, saltBuckets = 4)
-    val got = Pairs.candidatePairs(blocks, cfg).as[(String, String)].collect().toSet
+    val dropped = Observation()
+    val got = Pairs.candidatePairs(blocks, cfg, Some(dropped))
+      .as[(String, String)].collect().toSet
     assert(got == Set(("a", "b")))
     val stats = Pairs.droppedBlockStats(blocks, cfg).head()
     assert(stats.getLong(0) == 1 && stats.getLong(1) == 30)
+    // the in-band count, filled by candidatePairs' own sizing pass
+    val inBand = Observed.required(spark, dropped, "dropped blocks")
+    assert(inBand.getLong(0) == stats.getLong(0) && inBand.getLong(1) == stats.getLong(1))
   }
 
   /** The salted self-join must produce EXACTLY the same pair set as the

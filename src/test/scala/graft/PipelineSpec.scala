@@ -1,12 +1,15 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
-import graft.ops.ErMetrics
+import graft.ops.{ErMetrics, Pairs}
 import graft.pipeline.Pipeline
 
 class PipelineSpec extends AnyFunSuite {
@@ -93,6 +96,53 @@ class PipelineSpec extends AnyFunSuite {
     val back = Pipeline.run(spark, transcripts, Pipeline.Config(root))
       .as[(String, String)].collect().sorted.toSeq
     assert(back == loose)
+    deleteRecursively(Path.of(root))
+  }
+
+  /** The `[pipeline] dropped …` lines `body` prints on stderr. */
+  private def droppedLines(body: => Unit): Seq[String] = {
+    val buf = new ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(saved)
+    buf.toString("UTF-8").linesIterator.filter(_.startsWith("[pipeline] dropped")).toSeq
+  }
+
+  test("over-cap run: dropped-block telemetry is counted in-band and re-reported on resume") {
+    val transcripts = TranscriptGen.transcripts(spark, 60).toDF()
+    val root = tmpDir("dropped")
+    val cfg = Pipeline.Config(root,
+      pairCfg = Pairs.PairConfig(blockSizeCap = 8, hotThreshold = 4))
+    val cold = droppedLines(Pipeline.run(spark, transcripts, cfg))
+    val resumed = droppedLines(Pipeline.run(spark, transcripts, cfg))
+    val expected = Pairs.droppedBlockStats(
+      spark.read.parquet(s"$root/blocks/data"), cfg.pairCfg).head()
+    assert(expected.getLong(0) > 0, "the cap should bind on this corpus")
+    assert(cold == Seq(s"[pipeline] dropped ${expected.getLong(0)} oversized blocks " +
+      s"(${expected.getLong(1)} rows) at blockSizeCap=8"))
+    assert(resumed == cold)
+    deleteRecursively(Path.of(root))
+  }
+
+  /** Regression guard: checkpoint bookkeeping (row counts, lineage rows,
+    * schema inference), the CC fixpoint signature and the dropped-block
+    * stats all ride on the executions that produce the data.
+    */
+  test("a cold run costs one SQL execution per stage written, plus a fixed four") {
+    val transcripts = TranscriptGen.transcripts(spark, 40).toDF()
+    val root = tmpDir("execs")
+    val (executions, _) = SqlExecutions.count(spark) {
+      Pipeline.run(spark, transcripts, Pipeline.Config(root))
+    }
+    val written = Files.list(Path.of(root)).iterator().asScala
+      .count(p => Files.exists(p.resolve("_manifest.json")))
+    // records, blocks, pairs, scored, cc_iter_0, cc_iter_1.., entities
+    assert(written >= 7)
+    // input fingerprint, invariant audit, pairs sizing count, pairs
+    // localCheckpoint
+    val fixed = 4
+    assert(executions <= fixed + written,
+      s"$executions SQL executions for $written stages written")
     deleteRecursively(Path.of(root))
   }
 }
