@@ -117,7 +117,7 @@ object PlanAudit {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     println(s"scoring in codegen:    ${scoredPlan.contains("codegen id")}")
     println(s"no cartesian product:  ${!scoredPlan.contains("Cartesian")}")
-    println(s"jaro_winkler inlined:  ${scoredPlan.contains("jaro_winkler")}")
+    println(s"jaro_winkler inlined:  ${scoredPlan.contains("graft.functions.JaroWinkler.similarity")}")
     attached.count()
     val attachPlan = attached.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -43,28 +43,8 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
 
-    // Internal plan subjects: some operators end in an EAGER
-    // localCheckpoint (candidate machinery), which truncates their
-    // query-level explain to a scan of the checkpointed RDD. These
-    // entries rebuild the interesting inner dataflow WITHOUT the
-    // persist/checkpoint seams so the join shape (sized agg+join, cap
-    // filter, salted hot path) is visible in the dumped plan.
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col, explode}
-    val xtra: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "xtra_dedup_minhash_join" -> ((s, dir) =>
-        graft.ops.Pairs.candidatePairsForExplain(
-          Stages.docShingles(s, dir).select(col("doc_id").as("conv_id"),
-            explode(col("bands")).as("bkey")))),
-      "xtra_dedup_simhash_join" -> ((s, dir) =>
-        graft.ops.Pairs.candidatePairsForExplain(
-          graft.dedup.Dedup.simhashBuckets(graft.dedup.Dedup.simhashDocs(
-            s.read.parquet(s"$dir/documents.parquet")))))
-    )
-
     names.foreach { n =>
-      val fn = xtra.getOrElse(n, SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query: $n")))
+      val fn = SparkEntry.queries.getOrElse(n, sys.error(s"unknown query: $n"))
       spark.sparkContext.setJobDescription(s"plandump: $n (finalize)")
       val df = fn(spark, sfDir)
       val qe = df.queryExecution

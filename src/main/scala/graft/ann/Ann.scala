@@ -18,7 +18,7 @@ import graft.util.Hashing
 object Ann {
 
   /** Cosine similarity of two double arrays (0 when either norm is 0).
-    * Built on the DotFold codegen expression (round-6 optimization): the
+    * Built on the DotFold native kernel (round-6 optimization): the
     * former `aggregate(zip_with(...))` HOFs evaluated interpreted, and
     * the pair side of a join pays this O(pairs) times. Arithmetic —
     * sequential left fold, dot / (na * nb) — is bit-identical.

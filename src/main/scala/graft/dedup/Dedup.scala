@@ -202,7 +202,7 @@ object Dedup {
   def simhashPairs(documents: DataFrame, maxHamming: Int = 3,
       cfg: Pairs.PairConfig = Pairs.PairConfig()): DataFrame = {
     // the signature is computed once per doc and persisted; the
-    // signature itself is the native codegen Simhash64 expression (the
+    // signature itself is the native Simhash64 kernel (the
     // former HOF fold was the most expensive per-doc feature here)
     val docs = simhashDocs(documents).persist(StorageLevel.MEMORY_AND_DISK)
     // band-bucket self-join through Pairs.candidatePairs — same
@@ -249,7 +249,7 @@ object Dedup {
     * list_cosine_similarity on DOUBLE[] bit-for-bit. Norms are
     * precomputed per vector (one norm per row, not two per pair — the
     * self-join's pair side dominated this query's cost), and the dot
-    * product is the codegen DotFold expression; both are bit-identical
+    * product is the native DotFold kernel; both are bit-identical
     * to the former per-pair HOF folds (Ann.cosineWithNorms scaladoc).
     */
   def embeddingCosinePairs(embeddings: DataFrame, tau: Double,

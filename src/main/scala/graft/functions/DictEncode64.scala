@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Dictionary-encode a string array to its sorted distinct xxhash64
-  * ids as ONE native codegen expression — the hot-loop form of
+  * ids as ONE native kernel — the hot-loop form of
   * `array_sort(array_distinct(transform(x, xxhash64)))`
   * (Features.dictEncode), whose `transform` HOF is CodegenFallback and
   * whose distinct/sort each allocate per row. The swoosh refine path
@@ -18,18 +17,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * equality): each element hashed with Spark's own XXH64 at the
   * builtin's seed 42, then sorted ascending (signed, = array_sort on
   * longs) and deduplicated — distinct-then-sort and sort-then-unique
-  * coincide on sets. Elements must be non-null (every caller feeds
-  * canonical value sets).
+  * coincide on sets. A NULL element is an IllegalArgumentException
+  * (every caller feeds canonical value sets, which have none).
   */
 object DictEncode64 {
 
-  /** Static entry point for generated code. */
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
+      Kernel.requireNoNullElement("DictEncode64", arr, i)
       hs(i) = XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
       i += 1
     }
@@ -52,21 +51,5 @@ object DictEncode64 {
   }
 
   def dictEncode64(values: Column): Column =
-    ColumnBridge.toColumn(DictEncode64Expr(ColumnBridge.toExpression(values)))
-}
-
-case class DictEncode64Expr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    DictEncode64.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DictEncode64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "dict_encode64"
+    Kernel(this, ArrayType(LongType, containsNull = false), values)
 }

@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
-/** Exact Jaccard similarity of two SORTED, DEDUPLICATED string arrays as
-  * one allocation-free merge scan.
+/** Exact Jaccard similarity of two SORTED, DEDUPLICATED id arrays as one
+  * allocation-free merge scan.
   *
   * Spark's `array_intersect` + `array_union` each build a hash set and a
   * result array PER ROW — at ~10⁶ scored pairs/batch that allocation
@@ -16,40 +14,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * determinism rule), so intersection/union sizes come from a single
   * merge pass with zero allocation.
   *
+  * Inputs are dictionary-encoded value sets (Features.dictEncode: xxhash64
+  * of each element, sorted) — 8 bytes/element vs pointer + UTF8String, so
+  * the shuffled/cached pair payload and the per-pair memory traffic drop
+  * several-fold. Memory bandwidth was the measured non-scaling term in
+  * the 8-core vs 32-core comparison (BENCH.md round 1). Every caller
+  * passes such ids: scoring's token_ids, attach's e_token_ids and dedup's
+  * shingle_ids.
+  *
   * Semantics are bit-identical to
   * size(array_intersect)/size(array_union) on sorted-distinct inputs
   * (integer ratio in double division) — the DuckDB oracle is unchanged.
   */
 object JaccardSorted {
 
-  /** Static entry point for generated code. Inputs must be sorted +
-    * deduplicated; verified cheap in tests, assumed in the hot path.
+  /** Inputs must be sorted + deduplicated; verified cheap in tests,
+    * assumed in the hot path.
     */
   def compute(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0 && nb == 0) return 0.0
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (c == 0) { inter += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    inter.toDouble / union.toDouble
-  }
-
-  /** Long-array variant: the scoring hot path runs over dictionary-
-    * encoded token ids (xxhash64 of each token, sorted) instead of the
-    * string sets — 8 bytes/element vs pointer + UTF8String, so the
-    * shuffled/ cached pair payload and the per-pair memory traffic drop
-    * several-fold. Memory bandwidth was the measured non-scaling term in
-    * the 8-core vs 32-core comparison (BENCH.md round 1).
-    */
-  def computeLongs(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
     val nb = b.numElements()
     if (na == 0 && nb == 0) return 0.0
@@ -68,39 +50,5 @@ object JaccardSorted {
   }
 
   def jaccardSorted(a: Column, b: Column): Column =
-    ColumnBridge.toColumn(JaccardSortedExpr(
-      ColumnBridge.toExpression(a), ColumnBridge.toExpression(b)))
-}
-
-case class JaccardSortedExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  /** Element-type dispatch, resolved once at plan time: string arrays use
-    * the UTF8String merge, long arrays (dictionary-encoded tokens) the
-    * primitive merge.
-    */
-  private lazy val isLongElems: Boolean = left.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (isLongElems)
-      JaccardSorted.computeLongs(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else
-      JaccardSorted.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isLongElems) "computeLongs" else "compute"
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaccardSorted.$fn($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "jaccard_sorted"
+    Kernel(this, DoubleType, a, b)
 }

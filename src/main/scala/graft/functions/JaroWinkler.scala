@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler similarity (Winkler 1990, standard parameters: prefix
@@ -11,9 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * SURVEY.md §2.3 F7 / §4.2: Spark has no built-in (levenshtein yes, JW
   * no), and BASELINE.json north_star requires batched codegen scoring —
-  * so this is a native Catalyst `BinaryExpression` with `doGenCode`
-  * emitting a static call, keeping pair scoring inside whole-stage
-  * codegen (a Scala UDF would break the codegen span and box rows).
+  * so this is a native kernel: generated code calls `similarity`
+  * directly (Kernel / StaticInvoke), keeping pair scoring inside
+  * whole-stage codegen (a Scala UDF would break the codegen span and box
+  * rows).
   *
   * Semantics match DuckDB's `jaro_winkler_similarity` (validated in
   * ScoringSpec against golden values, e.g. JW("MARTHA","MARHTA")=0.9611)
@@ -34,7 +34,7 @@ object JaroWinkler {
     override def initialValue(): Array[Boolean] = new Array[Boolean](MaxLen)
   }
 
-  /** Pure implementation; called from generated code — keep it static.
+  /** Pure implementation; called from generated code — keep it public.
     * `cap` bounds both inputs to their first `cap` characters (same
     * semantics as substr(x, 1, cap) upstream, without the per-row
     * allocation — the scoring pass runs millions of rows per task and
@@ -166,29 +166,8 @@ object JaroWinkler {
   }
 
   /** Column-API entry point. `cap` bounds inputs to their first `cap`
-    * chars inside the expression (no substring allocation upstream).
+    * chars inside the kernel (no substring allocation upstream).
     */
   def jaroWinkler(a: Column, b: Column, cap: Int = Int.MaxValue): Column =
-    graft.functions.ColumnBridge.toColumn(
-      JaroWinklerExpr(ColumnBridge.toExpression(a), ColumnBridge.toExpression(b), cap))
-}
-
-case class JaroWinklerExpr(left: Expression, right: Expression,
-    cap: Int = Int.MaxValue) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinkler.similarity(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaroWinkler.similarity($a, $b, $cap)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "jaro_winkler"
+    Kernel(this, "similarity", DoubleType, a, b, lit(cap))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact Levenshtein distance, tuned for the scoring hot path.
@@ -11,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Profiled at the bench tier (Profile main, 693k hydrated pairs ×8):
   * the built-in `levenshtein` was 62% of the whole full-feature scoring
   * pass — it DPs over code points via per-cell multi-byte decoding and
-  * allocates per row. This expression is value-identical (golden spec
+  * allocates per row. This kernel is value-identical (golden spec
   * compares against the built-in on random inputs incl. multibyte):
   *
   *  - ASCII × ASCII (the overwhelming case; `isFullAscii` is one vector
@@ -97,26 +96,5 @@ object LevenshteinFast {
   def compute(a: UTF8String, b: UTF8String): Int = compute(a, b, Int.MaxValue)
 
   def levenshteinFast(a: Column, b: Column, cap: Int = Int.MaxValue): Column =
-    ColumnBridge.toColumn(LevenshteinFastExpr(
-      ColumnBridge.toExpression(a), ColumnBridge.toExpression(b), cap))
-}
-
-case class LevenshteinFastExpr(left: Expression, right: Expression,
-    cap: Int = Int.MaxValue) extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LevenshteinFast.compute(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LevenshteinFast.compute($a, $b, $cap)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "levenshtein_fast"
+    Kernel(this, IntegerType, a, b, lit(cap))
 }

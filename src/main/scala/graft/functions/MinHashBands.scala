@@ -1,21 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash-LSH band keys as ONE native Catalyst expression.
+/** MinHash-LSH band keys as ONE native kernel.
   *
   * The pure-HOF formulation (transform ∘ aggregate ∘ least over a hash
   * bank, SURVEY.md §4.2) is semantically right but Spark's higher-order
   * functions are CodegenFallback — b×r nested aggregates evaluate
   * interpreted per row, which a thread dump showed dominating the
-  * feature stage. This expression does the whole signature in one tight
-  * loop; codegen emits a single static call (same pattern as
-  * JaroWinkler).
+  * feature stage. This kernel does the whole signature in one tight
+  * loop; codegen emits a single static call (Kernel, like every other
+  * kernel). A NULL element is an IllegalArgumentException.
   *
   * Hash family — chosen to be ENGINE-PORTABLE, not engine-specific:
   * each element is hashed once with md5; the first two 64-bit words of
@@ -42,7 +41,6 @@ object MinHashBands {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** Static entry point called from generated code. */
   def compute(arr: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
@@ -52,6 +50,7 @@ object MinHashBands {
     val md = md5Local.get()
     var i = 0
     while (i < n) {
+      Kernel.requireNoNullElement("MinHashBands", arr, i)
       val s = arr.getUTF8String(i)
       md.reset()
       md.update(s.getBytes)
@@ -93,24 +92,6 @@ object MinHashBands {
   }
 
   def minhashBands(shingles: Column, bands: Int, rowsPerBand: Int): Column =
-    ColumnBridge.toColumn(
-      MinHashBandsExpr(ColumnBridge.toExpression(shingles), bands, rowsPerBand))
-}
-
-case class MinHashBandsExpr(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashBands.compute(v.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashBands.compute($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_bands"
+    Kernel(this, ArrayType(StringType, containsNull = false),
+      shingles, lit(bands), lit(rowsPerBand))
 }

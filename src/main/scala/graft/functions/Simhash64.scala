@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
-/** 64-bit SimHash over a token array as ONE native codegen expression.
+/** 64-bit SimHash over a token array as ONE native kernel.
   *
   * The pure-HOF formulation (Features.simhash64's transform ∘ aggregate
   * ∘ zip_with vote fold) is semantically right but CodegenFallback:
@@ -25,7 +23,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Bit-for-bit identical to the HOF version on non-null token arrays
   * with non-null elements (the only inputs the dedup path produces), so
-  * the exact DuckDB dedup_simhash oracle is unchanged.
+  * the exact DuckDB dedup_simhash oracle is unchanged. A NULL element is
+  * an IllegalArgumentException.
   */
 object Simhash64 {
 
@@ -34,13 +33,13 @@ object Simhash64 {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** Static entry point for generated code. */
   def compute(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     val votes = new Array[Int](64)
     val md = md5Local.get()
     var t = 0
     while (t < n) {
+      Kernel.requireNoNullElement("Simhash64", tokens, t)
       val s = tokens.getUTF8String(t)
       md.reset()
       md.update(s.getBytes)
@@ -68,21 +67,5 @@ object Simhash64 {
   }
 
   def simhash64(tokens: Column): Column =
-    ColumnBridge.toColumn(Simhash64Expr(ColumnBridge.toExpression(tokens)))
-}
-
-case class Simhash64Expr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(v: Any): Any =
-    Simhash64.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Simhash64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
+    Kernel(this, LongType, tokens)
 }

@@ -86,10 +86,10 @@ object Features {
   }
 
   /** B4: MinHash-LSH banding is graft.functions.MinHashBands — a native
-    * codegen expression (Spark HOFs evaluate interpreted). Its hash
-    * family is engine-portable (md5-seeded double hashing), so the
-    * executable cross-engine spec of the semantics is the DuckDB oracle
-    * SQL in SparkEntry (er_blocks_minhash), which reproduces every band
+    * kernel called from generated code (Spark HOFs evaluate
+    * interpreted). Its hash family is engine-portable (md5-seeded
+    * double hashing), so the executable cross-engine spec of the
+    * semantics is the DuckDB oracle SQL in SparkEntry (er_blocks_minhash), which reproduces every band
     * key bit-for-bit; a former pure-HOF xxhash64 formulation was
     * retired with it (engine-specific, and never exercised outside
     * docs).
@@ -110,12 +110,12 @@ object Features {
   /** SimHash-64 over a token multiset: per-bit vote of md5Long64(token);
     * bit i of the hash feeds vote i, and votes fold MSB-first into the
     * signature. Used by near-dup detection (dedup module). Implemented
-    * as the native codegen expression graft.functions.Simhash64 — the
+    * as the native kernel graft.functions.Simhash64 — the
     * former pure-HOF formulation (transform ∘ aggregate ∘ zip_with) was
     * CodegenFallback and paid an interpreted 64-element fold plus two
     * array allocations PER TOKEN, dominating dedup_simhash's per-doc
     * cost (round-6 optimization; value bit-identical, see the
-    * expression's scaladoc for the equivalence argument).
+    * kernel's scaladoc for the equivalence argument).
     */
   def simhash64(tokens: Column): Column =
     graft.functions.Simhash64.simhash64(tokens)
@@ -156,7 +156,7 @@ object Features {
     * raw strings). Not done here: the sandbox tiers sit 5 orders of
     * magnitude below where 64-bit exposure becomes measurable.
     *
-    * Implemented since round 6 as the native codegen expression
+    * Implemented since round 6 as the native kernel
     * graft.functions.DictEncode64 (the former
     * array_sort∘array_distinct∘transform(xxhash64) chain evaluated its
     * transform interpreted per row); values are bit-identical —

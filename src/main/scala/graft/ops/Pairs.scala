@@ -79,28 +79,6 @@ object Pairs {
     } finally sized.unpersist(false)
   }
 
-  /** Plan-evidence variant of candidatePairs (graft.PlanDump): the
-    * identical dataflow minus the persist and eager-localCheckpoint
-    * seams, which truncate explain output to a scan of the checkpointed
-    * RDD, and minus the runtime hotRows branch — BOTH the cold
-    * equi-join and the salted hot path appear statically in the plan.
-    * NOT for production use: without the persist every subtree
-    * recomputes the sized table.
-    */
-  private[graft] def candidatePairsForExplain(blocks: DataFrame,
-      cfg: PairConfig = PairConfig()): DataFrame = {
-    val keptSizes = Blocking.blockSizes(blocks)
-      .filter(col("block_size") <= cfg.blockSizeCap)
-    val sized = blocks.join(keptSizes, "bkey")
-      .select(col("bkey"), col("conv_id"), col("block_size"))
-    val cold = sized.filter(col("block_size") <= cfg.hotThreshold)
-      .select(col("bkey"), col("conv_id"))
-    val hot = sized.filter(col("block_size") > cfg.hotThreshold)
-      .select(col("bkey"), col("conv_id"))
-    joinWithin(cold).unionByName(saltedJoinWithin(hot, cfg.saltBuckets))
-      .dropDuplicates("a_id", "b_id")
-  }
-
   /** Count of conversations in dropped (oversized) blocks — must be
     * reported, never silent (SURVEY.md §7.4 risk 2).
     */

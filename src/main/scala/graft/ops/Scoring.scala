@@ -45,11 +45,11 @@ object Scoring {
     */
   val MaxSimTextLen = 128
 
-  /** Normalized Levenshtein similarity on short text fields (F7): the
-    * built-in is codegen'd; applied to a bounded prefix of first_text,
-    * never text_all.
-    */
-  /** @param fastKernel true (default) → allocation-free capped byte-DP
+  /** Normalized Levenshtein similarity on short text fields (F7),
+    * applied to a bounded prefix (MaxSimTextLen) of first_text, never
+    * text_all; both kernels run inside whole-stage codegen.
+    *
+    * @param fastKernel true (default) → allocation-free capped byte-DP
     *   (`LevenshteinFast`, 2.4× faster, value-identical); false → the
     *   reference configuration over Spark's built-in levenshtein on
     *   substring'd inputs. Both are kept first-class because they probe
@@ -60,7 +60,7 @@ object Scoring {
     */
   def levSim(aRaw: Column, bRaw: Column, fastKernel: Boolean = true): Column = {
     if (fastKernel) {
-      // the cap lives INSIDE the expression (and as a least() on the
+      // the cap lives INSIDE the kernel (and as a least() on the
       // length), not as substring() columns — substring allocates a new
       // UTF8String per row per side, and allocation rate is a measured
       // non-scaling term at 32 cores

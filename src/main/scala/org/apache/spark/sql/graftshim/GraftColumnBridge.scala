@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (org.apache.spark.sql.classic.ExpressionUtils, SPARK-44444 ColumnNode
   * refactor). This shim lives under the org.apache.spark.sql package
   * namespace purely to re-export those two conversions for graft's
-  * custom Catalyst expressions — no Spark internals are modified.
+  * native kernel columns (graft.functions.Kernel) — no Spark internals
+  * are modified.
   */
 object GraftColumnBridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)

@@ -1,16 +1,28 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ann.Ann
+import graft.functions._
 
-/** Bit-equivalence pins for the round-6 native codegen expressions
-  * (DotFold, Simhash64) against the interpreted HOF formulations they
+/** Bit-equivalence pins for the round-6 native kernels (DotFold,
+  * Simhash64, DictEncode64) against the interpreted HOF formulations they
   * replaced. The HOF reference implementations are reconstructed INLINE
   * here — exactly the expressions the operators used through round 5 —
   * so any IEEE-754 ordering or vote-fold deviation fails the build
   * instead of surfacing as a DuckDB oracle hash mismatch.
+  *
+  * Plus one differential table over all seven kernels: every kernel
+  * column is collected under whole-stage codegen, a codegen projection
+  * and the interpreted projection, on ScalaCheck-generated inputs, and
+  * must match a direct call of the kernel's function on every path.
   */
 class NativeFoldSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -37,8 +49,11 @@ class NativeFoldSpec extends AnyFunSuite {
     rows.foreach { case (f, r) => assert(bits(f) == bits(r)) }
   }
 
-  /** Collects `df` with the given session confs set, then restores them. */
-  private def collectUnder[T](df: org.apache.spark.sql.Dataset[T],
+  /** Builds and collects `df` with the given session confs set, then
+    * restores them. By-name, so each path plans a fresh Dataset: whether
+    * a Project joins whole-stage codegen is decided once, at planning.
+    */
+  private def collectUnder[T](df: => org.apache.spark.sql.Dataset[T],
       confs: (String, String)*): Seq[T] = {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -49,6 +64,16 @@ class NativeFoldSpec extends AnyFunSuite {
     }
   }
 
+  private val noWholeStage = "spark.sql.codegen.wholeStage" -> "false"
+
+  /** The three evaluation paths every kernel must agree on. */
+  private val paths: Seq[(String, Seq[(String, String)])] = Seq(
+    "whole-stage codegen" -> Nil,
+    "codegen projection" -> Seq(noWholeStage,
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    "interpreted" -> Seq(noWholeStage,
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
   test("DotFold: mismatched lengths are NULL on the codegen and interpreted paths alike") {
     val hofDot = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
@@ -58,19 +83,13 @@ class NativeFoldSpec extends AnyFunSuite {
       (103L, Array(3.0), Array.empty[Double]),
       (104L, Array.empty[Double], Array.empty[Double])).toDF("id", "a", "b"))
       .localCheckpoint() // a scan, so the optimizer cannot fold the projection
-    val dotted = input.select(col("id"),
+    def dotted = input.select(col("id"),
       graft.functions.DotFold.dot(col("a"), col("b")).as("dot"),
       when(size(col("a")) === size(col("b")), hofDot).as("ref"))
     assert(dotted.schema("dot").nullable)
-    val typed = dotted.as[(Long, Option[Double], Option[Double])]
-    val noWholeStage = "spark.sql.codegen.wholeStage" -> "false"
-    val paths = Seq(
-      "whole-stage codegen" -> collectUnder(typed),
-      "codegen projection" -> collectUnder(typed, noWholeStage,
-        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-      "interpreted" -> collectUnder(typed, noWholeStage,
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-    paths.foreach { case (path, rows) =>
+    paths.foreach { case (path, confs) =>
+      val rows = collectUnder(
+        dotted.as[(Long, Option[Double], Option[Double])], confs: _*)
       assert(rows.size == 68, path)
       rows.foreach { case (id, dot, ref) =>
         if (id > 100 && id < 104) assert(dot.isEmpty, s"$path: row $id")
@@ -144,5 +163,123 @@ class NativeFoldSpec extends AnyFunSuite {
       hofSimhash(col("toks")).as("ref")).as[(Long, Long)].collect()
     assert(rows.length == 5)
     rows.foreach { case (f, r) => assert(f == r) }
+  }
+
+  // ---- differential table: all seven kernels on all three paths ----
+
+  /** `n` samples of `g` from a fixed seed, so the table is reproducible. */
+  private def sample[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+    Gen.listOfN(n, g).pureApply(Gen.Parameters.default.withSize(12), Seed(seed))
+
+  private def orNull[A](g: Gen[A]): Gen[Option[A]] =
+    Gen.frequency(1 -> Gen.const(None), 6 -> g.map(Some(_)))
+
+  /** Generated rows plus fixed edge rows, numbered as the `id` column. */
+  private def numbered[A](g: Gen[A], seed: Long, edges: A*): Seq[(Long, A)] =
+    (sample(g, 80, seed) ++ edges).zipWithIndex.map { case (r, i) => (i.toLong, r) }
+
+  private val char = Gen.frequency(
+    4 -> Gen.alphaNumChar, 1 -> Gen.oneOf(' ', 'é', 'ø', 'λ', '字', '日'))
+  private val text = Gen.choose(0, 24).flatMap(Gen.listOfN(_, char)).map(_.mkString)
+  private val texts = Gen.choose(0, 6).flatMap(Gen.listOfN(_, text))
+  private val ids = Gen.containerOf[Set, Long](Gen.choose(-6L, 6L)).map(_.toSeq.sorted)
+  private val vec = Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.choose(-1000.0, 1000.0)))
+
+  // edge rows: NULL on either side, empty values, multibyte text,
+  // mismatched lengths
+  private lazy val textPairs = numbered(Gen.zip(orNull(text), orNull(text)), 1,
+    (None, Some("x")), (Some(""), Some("")), (Some(""), Some("abc")),
+    (Some("日本語のテキスト"), Some("日本語テキスト")), (Some("aéλ字 prefix"), Some("aéλ字 other")))
+    .map { case (i, (a, b)) => (i, a, b) }.toDF("id", "a", "b")
+  private lazy val idPairs = numbered(Gen.zip(orNull(ids), orNull(ids)), 2,
+    (Some(Seq(1L)), None), (Some(Seq.empty[Long]), Some(Seq.empty[Long])),
+    (Some(Seq.empty[Long]), Some(Seq(-3L, 4L))), (Some(Seq(Long.MinValue, 0L)), Some(Seq(0L))))
+    .map { case (i, (a, b)) => (i, a, b) }.toDF("id", "a", "b")
+  private lazy val vecPairs = numbered(Gen.zip(orNull(vec), orNull(vec)), 3,
+    (None, Some(Seq(1.0))), (Some(Seq.empty[Double]), Some(Seq.empty[Double])),
+    (Some(Seq(1.0, 2.0)), Some(Seq(4.0, 5.0, 6.0))), (Some(Seq(3.0)), Some(Seq(-0.5))))
+    .map { case (i, (a, b)) => (i, a, b) }.toDF("id", "a", "b")
+  private lazy val textSets = numbered(orNull(texts), 4,
+    None, Some(Seq.empty[String]), Some(Seq("")), Some(Seq("日本語", "tøkens", "aéλ字")))
+    .toDF("id", "a")
+
+  private def utf8(r: Row, i: Int) = UTF8String.fromString(r.getString(i))
+  private def strings(r: Row, i: Int): ArrayData =
+    new GenericArrayData(r.getSeq[String](i).map(UTF8String.fromString).toArray[Any])
+  private def longs(r: Row, i: Int) = ArrayData.toArrayData(r.getSeq[Long](i).toArray)
+  private def doubles(r: Row, i: Int) = ArrayData.toArrayData(r.getSeq[Double](i).toArray)
+
+  /** One kernel of the table: its column over `input`'s non-id columns,
+    * and the kernel function called directly on a row without NULLs.
+    */
+  private case class KernelCase(name: String, input: DataFrame, column: Column,
+      direct: Row => Any, rejectsNullElement: Boolean = false)
+
+  private lazy val kernels = Seq(
+    KernelCase("JaroWinkler", textPairs,
+      JaroWinkler.jaroWinkler(col("a"), col("b"), 12),
+      r => JaroWinkler.similarity(utf8(r, 1), utf8(r, 2), 12)),
+    KernelCase("LevenshteinFast", textPairs,
+      LevenshteinFast.levenshteinFast(col("a"), col("b"), 12),
+      r => LevenshteinFast.compute(utf8(r, 1), utf8(r, 2), 12)),
+    KernelCase("JaccardSorted", idPairs,
+      JaccardSorted.jaccardSorted(col("a"), col("b")),
+      r => JaccardSorted.compute(longs(r, 1), longs(r, 2))),
+    KernelCase("DotFold", vecPairs,
+      DotFold.dot(col("a"), col("b")),
+      r => if (r.getSeq(1).size != r.getSeq(2).size) null
+        else DotFold.compute(doubles(r, 1), doubles(r, 2))),
+    KernelCase("MinHashBands", textSets,
+      MinHashBands.minhashBands(col("a"), 4, 2),
+      r => MinHashBands.compute(strings(r, 1), 4, 2).toObjectArray(StringType).toSeq
+        .map(_.toString), rejectsNullElement = true),
+    KernelCase("Simhash64", textSets,
+      Simhash64.simhash64(col("a")),
+      r => Simhash64.compute(strings(r, 1)), rejectsNullElement = true),
+    KernelCase("DictEncode64", textSets,
+      DictEncode64.dictEncode64(col("a")),
+      r => DictEncode64.compute(strings(r, 1)).toLongArray().toSeq, rejectsNullElement = true))
+
+  /** Doubles by raw bits, arrays as lists: exact comparison of results. */
+  private def exact(v: Any): Any = v match {
+    case d: Double => bits(d)
+    case s: scala.collection.Seq[_] => s.map(exact).toList
+    case x => x
+  }
+
+  test("differential table: all seven kernels agree on every path with a direct call") {
+    kernels.foreach { k =>
+      // a scan, so the optimizer cannot evaluate the projection itself
+      val input = k.input.localCheckpoint()
+      val expected = input.collect().map { r =>
+        val anyNull = (1 until r.length).exists(r.isNullAt)
+        r.getLong(0) -> exact(if (anyNull) null else k.direct(r))
+      }.toMap
+      paths.foreach { case (path, confs) =>
+        val rows = collectUnder(input.select(col("id"), k.column), confs: _*)
+        assert(rows.size == expected.size, s"${k.name} / $path")
+        rows.foreach { r =>
+          assert(exact(r.get(1)) == expected(r.getLong(0)), s"${k.name} / $path: row ${r.getLong(0)}")
+        }
+      }
+      // result nullability is the inputs' (DotFold adds the length check)
+      assert(input.select(k.column).schema.head.nullable, k.name)
+      val nonNull = spark.createDataFrame(input.na.drop().rdd,
+        StructType(input.schema.map(_.copy(nullable = false))))
+      assert(nonNull.select(k.column).schema.head.nullable == (k.name == "DotFold"), k.name)
+    }
+  }
+
+  test("a NULL array element fails with an error naming the kernel on every path") {
+    val input = Seq((1L, Seq("ok", "fine")), (2L, Seq("x", null, "y")))
+      .toDF("id", "a").localCheckpoint()
+    for (k <- kernels if k.rejectsNullElement; (path, confs) <- paths) {
+      val e = intercept[Exception](collectUnder(input.select(k.column), confs: _*))
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+        case iae: IllegalArgumentException => iae.getMessage.contains(k.name)
+        case _ => false
+      }
+      assert(named, s"${k.name} / $path: $e")
+    }
   }
 }

@@ -38,7 +38,15 @@ class PlanAuditSpec extends AnyFunSuite {
       val plan = formatted(scored)
       assert(plan.contains("codegen id"), "scoring fell out of whole-stage codegen")
       assert(!plan.contains("Cartesian"), "pair generation degenerated to a cartesian product")
-      assert(plan.contains("jaro_winkler"), "JaroWinkler expression missing from the scoring plan")
+      // formatted explain lists one "(n) Operator ..." section per node;
+      // each kernel must be a static call inside a whole-stage Project
+      val codegenProjects = plan.split("\n\n").filter(_.matches(
+        "(?s)\\(\\d+\\) Project \\[codegen id : \\d+\\].*"))
+      Seq("graft.functions.JaroWinkler.similarity", "graft.functions.LevenshteinFast.compute",
+          "graft.functions.JaccardSorted.compute").foreach { fn =>
+        assert(codegenProjects.exists(_.contains(s"static_invoke($fn(")),
+          s"$fn is not called inside a codegen'd Project of the scoring plan")
+      }
     }
   }
 
