@@ -43,6 +43,27 @@ import graft.ops._
   * work; 100 TB steady state is hours of such batches.
   */
 object BenchScale {
+
+  /** The regression band runs only on the shape its records were
+    * measured on: local[32], 32 cores, bench tier.
+    */
+  val BandCores = 32
+
+  /** Tracked median pairs/s of the fast kernel (`LevenshteinFast`),
+    * BENCH.md round 6 "kernel-throughput band" (the round-5
+    * median-of-medians its three local[32] repeats confirmed).
+    * Both tracked records predate the bit-parallel Levenshtein and
+    * Jaro-Winkler kernels (the reference pass runs the new Jaro-Winkler
+    * too); a 32-core re-base is open (ROADMAP).
+    */
+  val TrackedFastKernelMedian = 1.04e6
+
+  /** Tracked median pairs/s of the reference kernel (built-in
+    * `levenshtein` on substring'd inputs), BENCH.md round 6
+    * "kernel-throughput band" (round-4/5 band 441k–461k).
+    */
+  val TrackedRefKernelMedian = 4.41e5
+
   def main(args: Array[String]): Unit = {
     val cores = if (args.nonEmpty) args(0).toInt else 8
     val tier = if (args.length > 1) args(1) match {
@@ -208,9 +229,7 @@ object BenchScale {
     // the min is the steady-state ceiling, the median is what repeats
     // reproduce. In-JVM local[NN] masters only — local-cluster ladders
     // measure a different (serialization-bound) configuration.
-    if (cores == 32 && tier == Tiers.Bench && master == "local[32]") {
-      val trackedFastMed = 1.04e6 // round-5 median-of-medians, local[32]
-      val trackedRefMed = 4.41e5  // round-4/5 band 441k-461k
+    if (cores == BandCores && tier == Tiers.Bench && master == s"local[$BandCores]") {
       def band(label: String, got: Double, tracked: Double): Unit =
         if (got < 0.75 * tracked)
           System.err.println(f"[REGRESSION-BAND] $label median " +
@@ -220,8 +239,12 @@ object BenchScale {
         else
           System.err.println(f"[band] $label median $got%.0f pairs/s " +
             f"within 25%% of tracked $tracked%.0f")
-      band("fast-kernel", nScoredPerPass / scoringSecMed, trackedFastMed)
-      band("ref-kernel", nScoredPerPass / refSecMed, trackedRefMed)
+      band("fast-kernel", nScoredPerPass / scoringSecMed, TrackedFastKernelMedian)
+      band("ref-kernel", nScoredPerPass / refSecMed, TrackedRefKernelMedian)
+    } else {
+      System.err.println(s"[band] skipped: the kernel band needs " +
+        s"local[$BandCores] on $BandCores cores at the ${Tiers.Bench.name} tier " +
+        s"(this run: $master, $cores cores, ${tier.name})")
     }
     println(s"""{"cores":$cores,"master":"$master","tier":"${tier.name}","n_pairs":$nPairs,""" +
       s""""replication":$replication,"n_matches":${nMatches / replication},""" +

@@ -27,11 +27,21 @@ object JaroWinkler {
     */
   private val MaxLen = 512
 
-  private val buf1 = new ThreadLocal[Array[Boolean]] {
-    override def initialValue(): Array[Boolean] = new Array[Boolean](MaxLen)
+  /** Words per side at `MaxLen`. */
+  private val MaxWords = (MaxLen + 63) / 64
+
+  /** Per-thread bit sets of the ASCII path: `pos(c * MaxWords + w)` is the
+    * bitmask of positions `64w + k` of `s2` holding byte `c`; `flagged1`
+    * and `flagged2` mark the matched positions of each side.
+    */
+  private final class BitSets {
+    val pos = new Array[Long](128 * MaxWords)
+    val flagged1 = new Array[Long](MaxWords)
+    val flagged2 = new Array[Long](MaxWords)
   }
-  private val buf2 = new ThreadLocal[Array[Boolean]] {
-    override def initialValue(): Array[Boolean] = new Array[Boolean](MaxLen)
+
+  private val bitSets = new ThreadLocal[BitSets] {
+    override def initialValue(): BitSets = new BitSets
   }
 
   /** Pure implementation; called from generated code — keep it public.
@@ -43,8 +53,10 @@ object JaroWinkler {
     * match buffers; multibyte falls back to the String path.
     */
   def similarity(s1: UTF8String, s2: UTF8String, cap: Int): Double = {
+    // the guard is on the capped lengths: a long ASCII text under a
+    // small cap still takes the byte path
     if (s1.isFullAscii && s2.isFullAscii &&
-      s1.numBytes <= MaxLen && s2.numBytes <= MaxLen) {
+      math.min(s1.numBytes, cap) <= MaxLen && math.min(s2.numBytes, cap) <= MaxLen) {
       similarityAsciiCapped(s1, s2, cap)
     } else {
       val a = if (s1.numChars > cap) s1.substring(0, cap) else s1
@@ -57,7 +69,15 @@ object JaroWinkler {
     similarity(s1, s2, Int.MaxValue)
 
   /** Byte-path Jaro-Winkler for fully-ASCII inputs (identical result to
-    * the String path — chars == bytes).
+    * the String path — chars == bytes), with bit-parallel match flagging.
+    * The String path gives position i of `s1` the first unmatched j of
+    * `s2` inside the window [i - d, i + d] holding the same character;
+    * here that j is the lowest set bit of
+    * `pos(s1[i]) & ~flagged2 & window`, found in ⌈(2d + 1)/64⌉ + 1 word
+    * operations at most instead of a scan of the window. Transpositions
+    * walk the flagged bits of both sides in order. Cost O(len1 ·
+    * ⌈len2/64⌉) word operations; buffers 128 ASCII bytes × 8 words
+    * (8 KB) of positions plus 8 words of flags per side.
     */
   private def similarityAsciiCapped(s1: UTF8String, s2: UTF8String, cap: Int): Double = {
     val len1 = math.min(s1.numBytes, cap)
@@ -65,40 +85,73 @@ object JaroWinkler {
     if (len1 == 0 || len2 == 0) return 0.0
 
     val matchDist = math.max(math.max(len1, len2) / 2 - 1, 0)
-    val matched1 = buf1.get()
-    val matched2 = buf2.get()
-    java.util.Arrays.fill(matched1, 0, len1, false)
-    java.util.Arrays.fill(matched2, 0, len2, false)
+    val bs = bitSets.get()
+    val pos = bs.pos
+    val flagged1 = bs.flagged1
+    val flagged2 = bs.flagged2
+    val words1 = (len1 + 63) >>> 6
+    val words2 = (len2 + 63) >>> 6
+    var w = 0
+    while (w < words1) { flagged1(w) = 0L; w += 1 }
+    w = 0
+    while (w < words2) { flagged2(w) = 0L; w += 1 }
+    var j = 0
+    while (j < len2) {
+      pos(s2.getByte(j) * MaxWords + (j >>> 6)) |= 1L << (j & 63)
+      j += 1
+    }
     var m = 0
     var i = 0
     var identical = len1 == len2
     while (i < len1) {
-      if (identical && s1.getByte(i) != s2.getByte(i)) identical = false
+      val c = s1.getByte(i)
+      if (identical && c != s2.getByte(i)) identical = false
       val lo = math.max(0, i - matchDist)
       val hi = math.min(len2 - 1, i + matchDist)
-      var j = lo
-      var found = false
-      while (j <= hi && !found) {
-        if (!matched2(j) && s1.getByte(i) == s2.getByte(j)) {
-          matched1(i) = true; matched2(j) = true; m += 1; found = true
+      val row = c * MaxWords
+      val wLo = lo >>> 6
+      val wHi = hi >>> 6
+      w = wLo
+      while (w <= wHi) {
+        var free = pos(row + w) & ~flagged2(w)
+        if (w == wLo) free &= -1L << (lo & 63)
+        if (w == wHi) free &= -1L >>> (63 - (hi & 63))
+        if (free != 0L) {
+          flagged2(w) |= free & -free
+          flagged1(i >>> 6) |= 1L << (i & 63)
+          m += 1
+          w = wHi
         }
-        j += 1
+        w += 1
       }
       i += 1
+    }
+    // leave the position masks all-zero for the next call
+    j = 0
+    while (j < len2) {
+      pos(s2.getByte(j) * MaxWords + (j >>> 6)) = 0L
+      j += 1
     }
     if (identical) return 1.0
     if (m == 0) return 0.0
 
+    // transpositions: the k-th flagged position of s1 against the k-th
+    // flagged position of s2
     var t = 0
-    var k = 0
-    i = 0
-    while (i < len1) {
-      if (matched1(i)) {
-        while (!matched2(k)) k += 1
-        if (s1.getByte(i) != s2.getByte(k)) t += 1
-        k += 1
+    var w2 = 0
+    var bits2 = flagged2(0)
+    w = 0
+    while (w < words1) {
+      var bits1 = flagged1(w)
+      while (bits1 != 0L) {
+        while (bits2 == 0L) { w2 += 1; bits2 = flagged2(w2) }
+        val p1 = (w << 6) + java.lang.Long.numberOfTrailingZeros(bits1)
+        val p2 = (w2 << 6) + java.lang.Long.numberOfTrailingZeros(bits2)
+        if (s1.getByte(p1) != s2.getByte(p2)) t += 1
+        bits1 &= bits1 - 1
+        bits2 &= bits2 - 1
       }
-      i += 1
+      w += 1
     }
     val mm = m.toDouble
     val jaro = (mm / len1 + mm / len2 + (mm - t / 2) / mm) / 3.0

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Incremental resolution: attach NEWLY-INGESTED records to an existing
   * entity catalog without re-clustering the corpus — the production
@@ -62,8 +63,18 @@ object Incremental {
     // production deployment persists with its entity table) skips the
     // per-batch dictEncode entirely; the ids are the same
     // Features.dictEncode(token_union) either way, so candidates and
-    // scores are identical.
-    val ent = (if (entities.columns.contains("e_token_ids")) {
+    // scores are identical. A supplied column of any other type (say,
+    // string tokens under that name) is refused here, at plan time:
+    // jaccard over it would not be the batch path's score.
+    val supplied = entities.schema.find(_.name == "e_token_ids")
+    supplied.foreach { f =>
+      require(f.dataType match {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }, s"attach: catalog column e_token_ids must be array<bigint> " +
+        s"(Features.dictEncode of token_union), got ${f.dataType.simpleString}")
+    }
+    val ent = (if (supplied.isDefined) {
       entities.select(col("entity_id"), col("e_token_ids"),
         col("strong_keys_union"))
     } else {

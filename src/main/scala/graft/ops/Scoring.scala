@@ -49,8 +49,8 @@ object Scoring {
     * applied to a bounded prefix (MaxSimTextLen) of first_text, never
     * text_all; both kernels run inside whole-stage codegen.
     *
-    * @param fastKernel true (default) → allocation-free capped byte-DP
-    *   (`LevenshteinFast`, 2.4× faster, value-identical); false → the
+    * @param fastKernel true (default) → allocation-free capped
+    *   bit-vector kernel (`LevenshteinFast`, value-identical); false → the
     *   reference configuration over Spark's built-in levenshtein on
     *   substring'd inputs. Both are kept first-class because they probe
     *   different hardware regimes: BenchScale measures 8→32-core scaling

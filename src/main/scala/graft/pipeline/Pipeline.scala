@@ -31,7 +31,15 @@ object Pipeline {
   /** Bumped whenever a stage's semantics change: checkpoints written by
     * older code must not be resumed into newer pipelines.
     */
-  val CodeVersion = "g6"
+  val CodeVersion = "g7"
+
+  /** What the `scored` checkpoint holds: the pair, its features, score
+    * and decision — not the hydrated payload (token ids, first text,
+    * strong keys) the features were computed from, which `records`
+    * already stores once per conversation.
+    */
+  val ScoredColumns = Seq("a_id", "b_id", "strong_overlap", "jaccard_tokens",
+    "lev_first", "jw_first", "dt_sec", "dn_turns", "score", "is_match")
 
   /** Cheap order-independent input fingerprint: one scan, (row count,
     * XOR of row hashes — overflow-free at any scale) over the
@@ -123,7 +131,7 @@ object Pipeline {
 
     val scored = stage("scored") {
       Scoring.score(Pairs.hydrate(pairs, records), cfg.matchType,
-        cfg.jaccardThreshold)
+        cfg.jaccardThreshold).select(ScoredColumns.map(col): _*)
     }
 
     val entities = stage("entities") {

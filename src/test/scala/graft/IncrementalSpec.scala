@@ -69,6 +69,23 @@ class IncrementalSpec extends AnyFunSuite {
     assert(capped == Map("n1" -> "n1"))
   }
 
+  test("attach rejects a supplied e_token_ids that is not array<bigint>, at plan time") {
+    val base = recs(Seq(("c1", Seq("alpha", "beta"), Seq("T:a"))))
+    val entities = Entities.fuse(base, Seq(("c1", "c1")).toDF("conv_id", "entity_id"))
+    val newr = recs(Seq(("n1", Seq("alpha", "beta"), Seq.empty)))
+    // an index-ready catalog is accepted …
+    val ready = entities.withColumn("e_token_ids", Features.dictEncode(col("token_union")))
+    assert(Incremental.attach(newr, ready).as[(String, String)].collect().toMap ==
+      Map("n1" -> "c1"))
+    // … a column of strings, or of 4-byte ids, under that name is not
+    for (wrong <- Seq(col("token_union"), transform(
+        Features.dictEncode(col("token_union")), x => x.cast("int")))) {
+      val e = intercept[IllegalArgumentException](
+        Incremental.attach(newr, entities.withColumn("e_token_ids", wrong)))
+      assert(e.getMessage.contains("e_token_ids"), e.getMessage)
+    }
+  }
+
   test("attach over the generated tier agrees with batch CC for clean splits") {
     // base = buckets 0-8, new = bucket 9 of the t1 corpus; for every new
     // record that the BATCH pipeline put into a multi-member entity whose

@@ -180,14 +180,27 @@ class NativeFoldSpec extends AnyFunSuite {
 
   private val char = Gen.frequency(
     4 -> Gen.alphaNumChar, 1 -> Gen.oneOf(' ', 'é', 'ø', 'λ', '字', '日'))
-  private val text = Gen.choose(0, 24).flatMap(Gen.listOfN(_, char)).map(_.mkString)
+  // ASCII text past one 64-bit word, so the bit-parallel Levenshtein and
+  // Jaro-Winkler paths run with several words; the small alphabet makes
+  // repeated characters compete for matches
+  private val longText = Gen.oneOf(Gen.alphaNumChar, Gen.oneOf('a', 'b', ' '))
+    .flatMap(c => Gen.choose(60, 200).flatMap(Gen.listOfN(_, c))).map(_.mkString)
+  private val text = Gen.frequency(
+    4 -> Gen.choose(0, 24).flatMap(Gen.listOfN(_, char)).map(_.mkString),
+    1 -> longText)
+  private val nearDup = for {
+    a <- longText
+    at <- Gen.choose(0, a.length - 1)
+    c <- Gen.alphaNumChar
+  } yield (Option(a), Option(a.updated(at, c)))
   private val texts = Gen.choose(0, 6).flatMap(Gen.listOfN(_, text))
   private val ids = Gen.containerOf[Set, Long](Gen.choose(-6L, 6L)).map(_.toSeq.sorted)
   private val vec = Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.choose(-1000.0, 1000.0)))
 
   // edge rows: NULL on either side, empty values, multibyte text,
   // mismatched lengths
-  private lazy val textPairs = numbered(Gen.zip(orNull(text), orNull(text)), 1,
+  private lazy val textPairs = numbered(
+    Gen.frequency(3 -> Gen.zip(orNull(text), orNull(text)), 1 -> nearDup), 1,
     (None, Some("x")), (Some(""), Some("")), (Some(""), Some("abc")),
     (Some("日本語のテキスト"), Some("日本語テキスト")), (Some("aéλ字 prefix"), Some("aéλ字 other")))
     .map { case (i, (a, b)) => (i, a, b) }.toDF("id", "a", "b")
@@ -222,6 +235,12 @@ class NativeFoldSpec extends AnyFunSuite {
     KernelCase("LevenshteinFast", textPairs,
       LevenshteinFast.levenshteinFast(col("a"), col("b"), 12),
       r => LevenshteinFast.compute(utf8(r, 1), utf8(r, 2), 12)),
+    KernelCase("JaroWinkler (cap 130)", textPairs,
+      JaroWinkler.jaroWinkler(col("a"), col("b"), 130),
+      r => JaroWinkler.similarity(utf8(r, 1), utf8(r, 2), 130)),
+    KernelCase("LevenshteinFast (cap 130)", textPairs,
+      LevenshteinFast.levenshteinFast(col("a"), col("b"), 130),
+      r => LevenshteinFast.compute(utf8(r, 1), utf8(r, 2), 130)),
     KernelCase("JaccardSorted", idPairs,
       JaccardSorted.jaccardSorted(col("a"), col("b")),
       r => JaccardSorted.compute(longs(r, 1), longs(r, 2))),

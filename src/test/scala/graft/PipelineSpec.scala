@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
-import graft.ops.{ErMetrics, Pairs}
+import graft.ops.{ErMetrics, Pairs, Scoring}
 import graft.pipeline.Pipeline
 
 class PipelineSpec extends AnyFunSuite {
@@ -143,6 +143,22 @@ class PipelineSpec extends AnyFunSuite {
     val fixed = 4
     assert(executions <= fixed + written,
       s"$executions SQL executions for $written stages written")
+    deleteRecursively(Path.of(root))
+  }
+
+  test("the scored checkpoint holds the pair, its features, score and decision only") {
+    val transcripts = TranscriptGen.transcripts(spark, 40).toDF()
+    val root = tmpDir("scored")
+    Pipeline.run(spark, transcripts, Pipeline.Config(root))
+    val scored = spark.read.parquet(s"$root/scored/data")
+    assert(scored.columns.toSeq == Seq("a_id", "b_id", "strong_overlap",
+      "jaccard_tokens", "lev_first", "jw_first", "dt_sec", "dn_turns", "score", "is_match"))
+    // the same rows and values as the full scored frame, projected
+    val records = spark.read.parquet(s"$root/records/data")
+    val pairs = spark.read.parquet(s"$root/pairs/data")
+    val full = Scoring.score(Pairs.hydrate(pairs, records)).select(scored.columns.map(col): _*)
+    assert(scored.count() > 0)
+    assert(scored.exceptAll(full).isEmpty && full.exceptAll(scored).isEmpty)
     deleteRecursively(Path.of(root))
   }
 }
