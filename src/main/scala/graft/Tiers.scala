@@ -31,10 +31,22 @@ object Tiers {
     }
   }
 
+  /** Root of everything the entry-point mains generate, checkpoint and
+    * cache: the build's `target` directory, resolved against the working
+    * directory (the project root, where sbt runs and forks).
+    */
+  val TargetRoot: String = Paths.get("target").toAbsolutePath.normalize.toString
+
   /** Stable on-disk home for generated data; referenced (hard-coded for
     * the t2 tier) by SparkEntry.oracleSql via read_parquet().
     */
-  def dataDir(tier: Tier): String = s"/root/repo/target/graft-data/${tier.name}"
+  def dataDir(tier: Tier): String = s"$TargetRoot/graft-data/${tier.name}"
+
+  /** The production pipeline's checkpoint root for `tier`. */
+  def checkpointRoot(tier: Tier): String = s"$TargetRoot/graft-ckpt/${tier.name}"
+
+  /** Where `Stages` keeps the stages it derives beyond the pipeline's. */
+  val StagesRoot = s"$TargetRoot/graft-stages"
 
   def transcriptsPath(tier: Tier): String = s"${dataDir(tier)}/transcripts.parquet"
   def labelsPath(tier: Tier): String = s"${dataDir(tier)}/labels.parquet"

@@ -73,6 +73,20 @@ class ParquetTableIO(root: String) extends TableIO {
   override def read(spark: SparkSession, stage: String): DataFrame =
     spark.read.parquet(dataPath(stage))
 
+  /** Compute-or-resume, the freshness rule of every checkpoint: the
+    * stage as checkpointed when its manifest carries `inputFingerprint`,
+    * else `compute` (which may write side files into the stage
+    * directory) written over any stale copy; and whether it resumed.
+    */
+  def computeOrResume(spark: SparkSession, stage: String, inputFingerprint: String,
+      runId: String)(compute: => DataFrame): (DataFrame, Boolean) =
+    if (manifestInputFingerprint(stage).contains(inputFingerprint))
+      (read(spark, stage), true)
+    else {
+      dropFrom(stage)
+      (write(compute, stage, runId, inputFingerprint), false)
+    }
+
   override def write(df: DataFrame, stage: String, runId: String,
       inputFingerprint: String): DataFrame = {
     val spark = df.sparkSession

@@ -1,13 +1,19 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.io.File
+import java.nio.file.{Files, Path, Paths}
+import java.util.zip.ZipFile
+
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.ParquetTableIO
 import graft.ops._
-import graft.util.Observed
+import graft.util.{Hashing, Observed}
 
 /** EP1′ (SURVEY.md §3.2): the flagship end-to-end ER run —
   * transcripts → collapse → features → blocks → candidate pairs →
@@ -27,11 +33,6 @@ object Pipeline {
       pairCfg: Pairs.PairConfig = Pairs.PairConfig(),
       runId: String = "run0",
       auditInvariant: Boolean = true)
-
-  /** Bumped whenever a stage's semantics change: checkpoints written by
-    * older code must not be resumed into newer pipelines.
-    */
-  val CodeVersion = "g7"
 
   /** What the `scored` checkpoint holds: the pair, its features, score
     * and decision — not the hydrated payload (token ids, first text,
@@ -60,89 +61,138 @@ object Pipeline {
     * excluded. The fields are serialized VERBATIM — a 32-bit hash of the
     * tuple (the round-2 shape) could collide two different configs and
     * silently resume stale checkpoints, the exact failure this
-    * fingerprint exists to prevent (round-2 ADVICE.md item 2).
+    * fingerprint exists to prevent (round-2 ADVICE.md item 2). It leads
+    * with `CodeFingerprint`, so checkpoints written by one build are
+    * recomputed, not resumed, under another.
     */
   def configFingerprint(cfg: Config): String =
-    s"$CodeVersion-${cfg.matchType}-${cfg.jaccardThreshold}-" +
+    s"$CodeFingerprint-${cfg.matchType}-${cfg.jaccardThreshold}-" +
       s"${cfg.tokenDfCap}-${cfg.pairCfg.blockSizeCap}-" +
       s"${cfg.pairCfg.hotThreshold}-${cfg.pairCfg.saltBuckets}"
 
-  def run(spark: SparkSession, transcripts: DataFrame, cfg: Config): DataFrame = {
-    val io = new ParquetTableIO(cfg.checkpointRoot)
-    val fp = s"${fingerprint(transcripts)}-${configFingerprint(cfg)}"
+  /** One sorted line per regular file under `root`: relative path, size,
+    * mtime. Content is deliberately not read: recompiling and regenerating
+    * both touch mtimes, and hashing every byte per check would cost a
+    * measurable slice of what resuming saves.
+    */
+  def listing(root: Path): String =
+    if (!Files.exists(root)) s"absent:$root"
+    else Using.resource(Files.walk(root))(_.iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map(p => s"${root.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
+      .toSeq.sorted.mkString("\n"))
 
-    /** Compute-or-resume one stage. */
-    def stage(name: String)(compute: => DataFrame): DataFrame =
-      if (io.manifestInputFingerprint(name).contains(fp)) io.read(spark, name)
-      else {
-        io.dropFrom(name)
-        io.write(compute, name, cfg.runId, fp)
+  /** Fingerprint of the code under `root`. A classes directory is its
+    * `listing`, so a rebuilt or touched class file changes it; a jar is
+    * listed by entry name, size and CRC, so a fresh copy of the same jar
+    * (sbt's forked `run` copies the packaged jar per JVM) keeps it.
+    */
+  def codeFingerprint(root: Path): String = Hashing.md5Hex(
+    if (Files.isDirectory(root)) listing(root)
+    else Using.resource(new ZipFile(root.toFile))(_.entries().asScala
+      .map(e => s"${e.getName}:${e.getSize}:${e.getCrc}").toSeq.sorted.mkString("\n")))
+
+  /** The build every checkpoint is written under, computed once per JVM:
+    * the code source that holds the graft classes, else (no code source)
+    * every jar on the classpath. Any rebuild changes it, so no version
+    * constant has to be bumped when a stage's semantics change.
+    */
+  lazy val CodeFingerprint: String =
+    Option(getClass.getProtectionDomain.getCodeSource) match {
+      case Some(src) => codeFingerprint(Paths.get(src.getLocation.toURI))
+      case None => Hashing.md5Hex(sys.props.getOrElse("java.class.path", "")
+        .split(File.pathSeparator).filter(_.endsWith(".jar"))
+        .map(j => s"$j:${listing(Paths.get(j))}").sorted.mkString("\n"))
+    }
+
+  /** The stage graph of one run: each node is computed or resumed on
+    * first access, after the nodes it reads, so a resumed node still
+    * re-runs the audit and the dropped-block warning upstream of it.
+    */
+  final class Graph(spark: SparkSession, transcripts: DataFrame, cfg: Config) {
+    private val io = new ParquetTableIO(cfg.checkpointRoot)
+    private lazy val fp = s"${fingerprint(transcripts)}-${configFingerprint(cfg)}"
+    private val outcomes = TrieMap.empty[String, Boolean]
+
+    /** Whether stage `name` was resumed from its checkpoint. */
+    def resumed(name: String): Boolean = outcomes.getOrElse(name, false)
+
+    /** Stage `name`; the nodes it `reads` are passed by value, so they
+      * are forced first even when this stage resumes without them.
+      */
+    private def stage(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame = {
+      val (df, hit) = io.computeOrResume(spark, name, fp, cfg.runId)(compute)
+      outcomes(name) = hit
+      df
+    }
+
+    lazy val records: DataFrame = {
+      val recs = stage("records")(Features.enrich(Collapse.collapse(transcripts)))
+      // The audit re-derives collapse∘explode over every turn — the right
+      // gate for a fresh records stage, but pure waste on every warm rerun
+      // of an already-audited checkpoint (measured ~28 s per Pipeline.run
+      // call at sf0.1, paid by EVERY pipeline-consuming query). A marker
+      // file carrying the full (input × config × code) fingerprint
+      // records that THIS checkpoint state passed; any change that would
+      // recompute records also invalidates the marker.
+      if (cfg.auditInvariant) {
+        val auditMarker = Paths.get(cfg.checkpointRoot, "records", "_audit_fp")
+        val alreadyAudited =
+          Files.exists(auditMarker) && Files.readString(auditMarker) == fp
+        if (!alreadyAudited) {
+          val violations = Collapse.invariantViolations(transcripts, recs).count()
+          require(violations == 0L,
+            s"per-turn text-equality invariant violated: $violations rows")
+          Files.writeString(auditMarker, fp)
+        }
       }
-
-    val records = stage("records") {
-      Features.enrich(Collapse.collapse(transcripts))
+      recs
     }
 
-    // The audit re-derives collapse∘explode over every turn — the right
-    // gate for a fresh records stage, but pure waste on every warm rerun
-    // of an already-audited checkpoint (measured ~28 s per Pipeline.run
-    // call at sf0.1, paid by EVERY pipeline-consuming query). A marker
-    // file carrying the full (input × config × code-version) fingerprint
-    // records that THIS checkpoint state passed; any change that would
-    // recompute records also invalidates the marker.
-    if (cfg.auditInvariant) {
-      val auditMarker = Paths.get(cfg.checkpointRoot, "records", "_audit_fp")
-      val alreadyAudited =
-        Files.exists(auditMarker) && Files.readString(auditMarker) == fp
-      if (!alreadyAudited) {
-        val violations = Collapse.invariantViolations(transcripts, records).count()
-        require(violations == 0L,
-          s"per-turn text-equality invariant violated: $violations rows")
-        Files.writeString(auditMarker, fp)
-      }
-    }
-
-    val blocks = stage("blocks") {
-      Blocking.allBlocks(records, cfg.tokenDfCap)
-    }
+    lazy val blocks: DataFrame =
+      stage("blocks", records)(Blocking.allBlocks(records, cfg.tokenDfCap))
 
     // Dropped-block telemetry: capping is NEVER silent (SURVEY.md §7.4
     // risk 2). The pairs sizing pass counts the over-cap blocks in-band;
     // the two numbers land in the pairs stage before its manifest (a
     // kill cannot commit pairs without them) and are re-read and
     // re-warned on every resume.
-    val droppedFile = Paths.get(cfg.checkpointRoot, "pairs", "_dropped_blocks.json")
-    val pairs = stage("pairs") {
-      val dropped = Observation()
-      val computed = Pairs.candidatePairs(blocks, cfg.pairCfg, Some(dropped))
-      val d = Observed.required(spark, dropped, "dropped-block telemetry")
-      Files.createDirectories(droppedFile.getParent)
-      Files.writeString(droppedFile,
-        s"""{"dropped_blocks":${d.getLong(0)},"dropped_rows":${d.getLong(1)}}""")
+    lazy val pairs: DataFrame = {
+      val droppedFile = Paths.get(cfg.checkpointRoot, "pairs", "_dropped_blocks.json")
+      val computed = stage("pairs", blocks) {
+        val dropped = Observation()
+        val p = Pairs.candidatePairs(blocks, cfg.pairCfg, Some(dropped))
+        val d = Observed.required(spark, dropped, "dropped-block telemetry")
+        Files.createDirectories(droppedFile.getParent)
+        Files.writeString(droppedFile,
+          s"""{"dropped_blocks":${d.getLong(0)},"dropped_rows":${d.getLong(1)}}""")
+        p
+      }
+      val telemetry = Files.readString(droppedFile)
+      val Seq(droppedBlocks, droppedRows) = Seq("dropped_blocks", "dropped_rows")
+        .map(k => s""""$k":(\\d+)""".r.findFirstMatchIn(telemetry).get.group(1).toLong)
+      if (droppedBlocks > 0) {
+        System.err.println(s"[pipeline] dropped $droppedBlocks oversized " +
+          s"blocks ($droppedRows rows) at blockSizeCap=${cfg.pairCfg.blockSizeCap}")
+      }
       computed
     }
-    val telemetry = Files.readString(droppedFile)
-    val Seq(droppedBlocks, droppedRows) = Seq("dropped_blocks", "dropped_rows")
-      .map(k => s""""$k":(\\d+)""".r.findFirstMatchIn(telemetry).get.group(1).toLong)
-    if (droppedBlocks > 0) {
-      System.err.println(s"[pipeline] dropped $droppedBlocks oversized " +
-        s"blocks ($droppedRows rows) at blockSizeCap=${cfg.pairCfg.blockSizeCap}")
-    }
 
-    val scored = stage("scored") {
+    lazy val scored: DataFrame = stage("scored", pairs, records) {
       Scoring.score(Pairs.hydrate(pairs, records), cfg.matchType,
         cfg.jaccardThreshold).select(ScoredColumns.map(col): _*)
     }
 
-    val entities = stage("entities") {
-      val edges = Scoring.matchEdges(scored)
-      val nodes = records.select(col("conv_id"))
-      // Each CC iteration checkpoints durably — the "resumes idempotently
-      // mid-clustering" requirement: a killed run's completed iterations
-      // are read back, not recomputed.
-      ConnectedComponents.run(edges, nodes,
+    // Each CC iteration checkpoints durably — the "resumes idempotently
+    // mid-clustering" requirement: a killed run's completed iterations
+    // are read back, not recomputed.
+    lazy val entities: DataFrame = stage("entities", scored, records) {
+      ConnectedComponents.run(Scoring.matchEdges(scored), records.select(col("conv_id")),
         checkpoint = (df, i) => stage(s"cc_iter_$i")(df))
     }
-    entities
   }
+
+  /** The entity labels: the `entities` node of a fresh graph. */
+  def run(spark: SparkSession, transcripts: DataFrame, cfg: Config): DataFrame =
+    new Graph(spark, transcripts, cfg).entities
 }

@@ -23,6 +23,8 @@ import graft.functions._
   * column is collected under whole-stage codegen, a codegen projection
   * and the interpreted projection, on ScalaCheck-generated inputs, and
   * must match a direct call of the kernel's function on every path.
+  * JaccardSorted and DotFold, which no other spec checks by value, also
+  * match a reference built from Spark's own array functions.
   */
 class NativeFoldSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -223,10 +225,13 @@ class NativeFoldSpec extends AnyFunSuite {
   private def doubles(r: Row, i: Int) = ArrayData.toArrayData(r.getSeq[Double](i).toArray)
 
   /** One kernel of the table: its column over `input`'s non-id columns,
-    * and the kernel function called directly on a row without NULLs.
+    * the kernel function called directly on a row without NULLs, and
+    * optionally a reference column built from Spark's own functions —
+    * the only check that catches a wrong value every path shares.
     */
   private case class KernelCase(name: String, input: DataFrame, column: Column,
-      direct: Row => Any, rejectsNullElement: Boolean = false)
+      direct: Row => Any, rejectsNullElement: Boolean = false,
+      reference: Option[Column] = None)
 
   private lazy val kernels = Seq(
     KernelCase("JaroWinkler", textPairs,
@@ -243,11 +248,19 @@ class NativeFoldSpec extends AnyFunSuite {
       r => LevenshteinFast.compute(utf8(r, 1), utf8(r, 2), 130)),
     KernelCase("JaccardSorted", idPairs,
       JaccardSorted.jaccardSorted(col("a"), col("b")),
-      r => JaccardSorted.compute(longs(r, 1), longs(r, 2))),
+      r => JaccardSorted.compute(longs(r, 1), longs(r, 2)),
+      reference = Some {
+        val union = size(array_union(col("a"), col("b")))
+        when(union === 0, lit(0.0))
+          .otherwise(size(array_intersect(col("a"), col("b"))).cast("double") / union)
+      }),
     KernelCase("DotFold", vecPairs,
       DotFold.dot(col("a"), col("b")),
       r => if (r.getSeq(1).size != r.getSeq(2).size) null
-        else DotFold.compute(doubles(r, 1), doubles(r, 2))),
+        else DotFold.compute(doubles(r, 1), doubles(r, 2)),
+      reference = Some(when(size(col("a")) === size(col("b")),
+        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0),
+          (acc, v) => acc + v)))),
     KernelCase("MinHashBands", textSets,
       MinHashBands.minhashBands(col("a"), 4, 2),
       r => MinHashBands.compute(strings(r, 1), 4, 2).toObjectArray(StringType).toSeq
@@ -274,6 +287,12 @@ class NativeFoldSpec extends AnyFunSuite {
         val anyNull = (1 until r.length).exists(r.isNullAt)
         r.getLong(0) -> exact(if (anyNull) null else k.direct(r))
       }.toMap
+      k.reference.foreach { ref =>
+        input.select(col("id"), ref).collect().foreach { r =>
+          assert(exact(r.get(1)) == expected(r.getLong(0)),
+            s"${k.name} / reference: row ${r.getLong(0)}")
+        }
+      }
       paths.foreach { case (path, confs) =>
         val rows = collectUnder(input.select(col("id"), k.column), confs: _*)
         assert(rows.size == expected.size, s"${k.name} / $path")

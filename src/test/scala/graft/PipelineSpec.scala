@@ -1,7 +1,9 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+import java.util.jar.{JarEntry, JarOutputStream}
 
 import scala.jdk.CollectionConverters._
 
@@ -97,6 +99,61 @@ class PipelineSpec extends AnyFunSuite {
       .as[(String, String)].collect().sorted.toSeq
     assert(back == loose)
     deleteRecursively(Path.of(root))
+  }
+
+  test("a rebuild changes the code fingerprint; another build's checkpoints recompute") {
+    // adding or touching a file under a code root changes its fingerprint
+    val code = Files.createTempDirectory("graft-code-")
+    val a = Files.writeString(code.resolve("A.class"), "a")
+    val initial = Pipeline.codeFingerprint(code)
+    Files.writeString(code.resolve("B.class"), "b")
+    val added = Pipeline.codeFingerprint(code)
+    Files.setLastModifiedTime(a,
+      FileTime.fromMillis(Files.getLastModifiedTime(a).toMillis + 1000))
+    val touched = Pipeline.codeFingerprint(code)
+    assert(Seq(initial, added, touched).distinct.size == 3)
+    // a jar is identified by its entries, so a fresh copy keeps its
+    // fingerprint and a changed entry does not
+    def jar(name: String, body: String): Path = {
+      val p = code.resolve(name)
+      val out = new JarOutputStream(Files.newOutputStream(p))
+      try { out.putNextEntry(new JarEntry("A.class")); out.write(body.getBytes("UTF-8")) }
+      finally out.close()
+      p
+    }
+    val built = Pipeline.codeFingerprint(jar("a.jar", "a"))
+    assert(Pipeline.codeFingerprint(Files.copy(code.resolve("a.jar"), code.resolve("copy.jar"))) == built)
+    assert(Pipeline.codeFingerprint(jar("b.jar", "b")) != built)
+
+    // the running build is the code source of the graft classes, and the
+    // config fingerprint carries it
+    val running = Paths.get(Pipeline.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    assert(Pipeline.CodeFingerprint == Pipeline.codeFingerprint(running))
+    val transcripts = TranscriptGen.transcripts(spark, 40).toDF()
+    val root = tmpDir("code")
+    val cfg = Pipeline.Config(root)
+    assert(Pipeline.configFingerprint(cfg).startsWith(s"${Pipeline.CodeFingerprint}-"))
+
+    val stages = Seq("records", "blocks", "pairs", "scored", "entities")
+    def manifest(stage: String) = Path.of(root, stage, "_manifest.json")
+    def runIds = stages.map(st => """"run_id":"([^"]*)"""".r
+      .findFirstMatchIn(Files.readString(manifest(st))).get.group(1)).distinct
+    val first = Pipeline.run(spark, transcripts, cfg).as[(String, String)].collect().sorted.toSeq
+    // same build: every stage resumed
+    Pipeline.run(spark, transcripts, cfg.copy(runId = "same-build")).count()
+    assert(runIds == Seq("run0"))
+    // the same checkpoints as another build (`code`) would have written
+    // them: every stage recomputed
+    stages.foreach { st =>
+      Files.writeString(manifest(st), Files.readString(manifest(st))
+        .replace(Pipeline.CodeFingerprint, Pipeline.codeFingerprint(code)))
+    }
+    val rebuilt = Pipeline.run(spark, transcripts, cfg.copy(runId = "other-build"))
+      .as[(String, String)].collect().sorted.toSeq
+    assert(runIds == Seq("other-build"))
+    assert(rebuilt == first)
+    deleteRecursively(Path.of(root))
+    deleteRecursively(code)
   }
 
   /** The `[pipeline] dropped …` lines `body` prints on stderr. */

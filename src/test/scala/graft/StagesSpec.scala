@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Pairs, Scoring}
+import graft.pipeline.Pipeline
 
-/** Pins the delta composition of Stages.fullScored: the cached SQL-universe
-  * scored table unioned with the scored (fullPairs ∖ sqlPairs) delta must
-  * be row-for-row identical to scoring the full universe directly. The two
-  * soundness legs — sqlUniversePairs ⊆ fullPairs (disjoint bkey namespaces
-  * keep strong/token cap fates unchanged when families are added) and
-  * row-wise-pure scoring — are exactly what this multiset equality tests.
+/** Pins what Stages composes from the pipeline's nodes: the three-family
+  * universe as the SQL universe ∪ the time-family delta, and the scored
+  * SQL universe as the pipeline's `scored` node restricted to the SQL
+  * universe. Both rest on disjoint bkey namespaces (adding block families
+  * never changes a strong/token block's cap fate, so sqlUniversePairs ⊆
+  * fullPairs) and on row-wise-pure scoring — exactly what these multiset
+  * equalities test.
   */
 class StagesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -42,16 +45,16 @@ class StagesSpec extends AnyFunSuite {
     assert(missing == 0L, s"$missing sql-universe pairs absent from fullPairs")
   }
 
-  test("delta-composed fullScored equals the direct full-universe scoring") {
-    val composed = Stages.fullScored(spark, dir)
+  test("sqlUniverseScored equals direct SQL-universe scoring, projected to ScoredColumns") {
+    val cols = Pipeline.ScoredColumns.map(col)
+    val composed = Stages.sqlUniverseScored(spark, dir)
     val direct = Scoring.score(
-      Pairs.hydrate(Stages.fullPairs(spark, dir), Stages.records(spark, dir)))
-    assert(composed.columns.sorted.toSeq == direct.columns.sorted.toSeq)
-    val cols = composed.columns.sorted.map(org.apache.spark.sql.functions.col)
+      Pairs.hydrate(Stages.sqlUniversePairs(spark, dir), Stages.records(spark, dir)))
+    assert(composed.columns.toSeq == Pipeline.ScoredColumns)
     // rows are unique per (a_id, b_id), so two NULL-safe excepts prove
     // multiset equality (an equi-join would silently drop NULL columns)
-    val a = composed.select(cols.toSeq: _*)
-    val b = direct.select(cols.toSeq: _*)
+    val a = composed.select(cols: _*)
+    val b = direct.select(cols: _*)
     assert(a.count() == b.count())
     assert(a.except(b).count() == 0L)
     assert(b.except(a).count() == 0L)
