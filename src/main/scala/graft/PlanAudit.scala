@@ -17,13 +17,14 @@ import graft.ops._
   * Usage: runMain graft.PlanAudit [sfDir]
   */
 object PlanAudit {
-  /** All data types appearing as a `tok` join key anywhere in the plan —
-    * the guard for the id-keyed incremental index (must be [LongType];
-    * plan STRINGS print keys without type names, so a text grep cannot
-    * catch a string-keyed regression). Shared by the main below and
-    * PlanAuditSpec.
+  /** All data types appearing as a `key` join key anywhere in the plan —
+    * the guard for 8-byte keyed joins: the id-keyed incremental index
+    * (`tok`) and the pair self-join and sizing join (`bkey`) must be
+    * [LongType]; plan STRINGS print keys without type names, so a text
+    * grep cannot catch a string-keyed regression. Shared by the main
+    * below and PlanAuditSpec.
     */
-  def tokJoinKeyTypes(p: org.apache.spark.sql.execution.SparkPlan)
+  def joinKeyTypes(p: org.apache.spark.sql.execution.SparkPlan, key: String)
       : Seq[org.apache.spark.sql.types.DataType] = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -33,8 +34,14 @@ object PlanAudit {
       case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
       case _ => Nil
     }
-    keys.collect { case a: AttributeReference if a.name == "tok" => a.dataType } ++
-      p.children.flatMap(tokJoinKeyTypes)
+    // a cached frame's joins live in its relation's plan, not in children
+    val cached = p match {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        Seq(s.relation.cachedPlan)
+      case _ => Nil
+    }
+    keys.collect { case a: AttributeReference if a.name == key => a.dataType } ++
+      (p.children ++ cached).flatMap(joinKeyTypes(_, key))
   }
 
   def main(args: Array[String]): Unit = {
@@ -126,9 +133,9 @@ object PlanAudit {
     // `tok#123` with no type name (longs get an L suffix, strings get
     // nothing), so a text search for "string" can never fail — it would
     // green-light the exact string-keyed regression this check guards.
-    // Walk the physical joins instead (tokJoinKeyTypes above) and assert
+    // Walk the physical joins instead (joinKeyTypes above) and assert
     // every `tok` join key is 8-byte LongType (the dictionary ids).
-    val tokTypes = tokJoinKeyTypes(attached.queryExecution.executedPlan).distinct
+    val tokTypes = joinKeyTypes(attached.queryExecution.executedPlan, "tok").distinct
     println(s"attach token idx on ids (tok join-key types must be [LongType]): " +
       s"${tokTypes == Seq(org.apache.spark.sql.types.LongType)} ($tokTypes)")
     spark.stop()

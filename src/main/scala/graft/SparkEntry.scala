@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.JaroWinkler.jaroWinkler
+import graft.functions.ShingleMinHash
 import graft.ops._
 import graft.pipeline.Pipeline
 import graft.text.TextOps
@@ -56,35 +57,46 @@ object SparkEntry {
     "er_strong_keys" -> ((s, dir) =>
       records(s, dir).select(col("conv_id"),
         coalesce(try_element_at(col("strong_keys"), lit(1)), lit("")).as("strong_key"))),
+    // token and shingle counts are sized from text_all: the records
+    // checkpoint keeps neither the token sequence nor the shingles
     "er_tokens" -> ((s, dir) =>
       records(s, dir).select(col("conv_id"),
-        size(col("tokens")).as("n_tokens"),
+        size(Features.tokenize(col("text_all"))).as("n_tokens"),
         size(col("token_set")).as("n_distinct_tokens"))),
     "er_shingles" -> ((s, dir) =>
       records(s, dir).select(col("conv_id"),
-        size(col("shingles")).as("n_distinct_shingles"))),
+        size(ShingleMinHash.signature(Features.tokenize(col("text_all")), 3,
+          Features.NumHashes).getField("shingle_ids")).as("n_distinct_shingles"))),
     "er_invariant" -> ((s, dir) => {
       val src = Tiers.transcriptsFor(s, dir)
       Collapse.invariantViolations(src, Collapse.collapse(src))
         .agg(count(lit(1)).as("violations"))
     }),
 
-    // ER: blocking (§2.4)
+    // ER: blocking (§2.4). Block keys are bigint; these outputs size
+    // the bigint blocks and print each key as the string it hashes,
+    // formatted from records (Blocking's *Labels tables)
     "er_blocks_strong" -> ((s, dir) =>
-      Blocking.blockSizes(Stages.strongBlocks(s, dir))),
+      Blocking.labelledSizes(Stages.strongBlocks(s, dir),
+        Blocking.strongLabels(records(s, dir)))),
     "er_blocks_token" -> ((s, dir) =>
-      Blocking.blockSizes(Stages.tokenBlocks(s, dir))),
+      Blocking.labelledSizes(Stages.tokenBlocks(s, dir),
+        Blocking.tokenLabels(records(s, dir)))),
     "er_blocks_minhash" -> ((s, dir) =>
-      Blocking.blockSizes(Blocking.minhashBlocks(records(s, dir)))),
+      Blocking.labelledSizes(Blocking.minhashBlocks(records(s, dir)),
+        Blocking.minhashLabels(records(s, dir)))),
     // band MEMBERSHIPS (conv_id, bkey) — the hub dump that carries the
     // one full pure-SQL derivation of the md5 MinHash bank; the
     // er_blocks_minhash sizes and the er_candidate_pairs 4-family
     // universe oracles read it instead of re-paying the bank (~49 s of
-    // DuckDB each at t2).
+    // DuckDB each at t2). Labels are formatted from records' minima.
     "er_bands_minhash" -> ((s, dir) =>
-      Blocking.minhashBlocks(records(s, dir))),
+      records(s, dir).select(col("conv_id"),
+        explode(ShingleMinHash.bandLabels(col("mh_minima"), Features.NumBands,
+          Features.RowsPerBand)).as("bkey"))),
     "er_blocks_time" -> ((s, dir) =>
-      Blocking.blockSizes(Stages.timeBlocks(s, dir))),
+      Blocking.labelledSizes(Stages.timeBlocks(s, dir),
+        Blocking.timeLabels(records(s, dir)))),
     "er_dropped_blocks" -> ((s, dir) =>
       Pairs.droppedBlockStats(
         Stages.strongBlocks(s, dir).unionByName(Stages.tokenBlocks(s, dir)))),
@@ -532,7 +544,7 @@ object SparkEntry {
        |)""".stripMargin
 
   /** MinHash-LSH band keys of the record corpus, reproduced EXACTLY:
-    * the native expression (functions.MinHashBands) hashes each shingle
+    * the native kernel (functions.ShingleMinHash) hashes each shingle
     * once with md5, seeds the double-hashing bank h_i = h1 + i·h2
     * (wrap-around), tracks unsigned minima, and emits "M|b|m0|m1" —
     * every step below is the same arithmetic in DuckDB types.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.ShingleMinHash
 import graft.ops.{Features, Pairs}
 import graft.text.TextOps
 
@@ -65,10 +66,9 @@ object Dedup {
     */
   def ngramJaccardPairs(documents: DataFrame, tau: Double = 0.6,
       shingleDfCap: Int = 1000): DataFrame = {
-    // shingling is an interpreted HOF (CodegenFallback) — compute it ONCE
-    // and persist: sizes, the index's two join sides and the df-cap agg
-    // would otherwise each re-shingle the corpus (measured 4× recompute
-    // at bench tier)
+    // shingle ids computed ONCE and persisted: sizes, the index's two
+    // join sides and the df-cap agg would otherwise each re-shingle the
+    // corpus (measured 4× recompute at bench tier)
     val sh = withShingleBands(documents)
       .select(col("doc_id"), col("shingle_ids"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -124,29 +124,29 @@ object Dedup {
     */
   def minhashPairs(documents: DataFrame, tau: Double = 0.6,
       cfg: Pairs.PairConfig = Pairs.PairConfig()): DataFrame = {
-    // shingle + signature computed ONCE and persisted: the bucket join's
-    // two sides and the verify hydration's two sides would otherwise
-    // each re-run the interpreted shingling HOF over the whole corpus
+    // shingle ids + band keys computed ONCE and persisted: the bucket
+    // join's two sides and the verify hydration's two sides would
+    // otherwise each re-shingle the whole corpus
     val docs = withShingleBands(documents).persist(StorageLevel.MEMORY_AND_DISK)
     try minhashPairsFromShingles(docs, tau, cfg)
     finally docs.unpersist(false)
   }
 
   /** (doc_id, shingle_ids, bands) projection shared by the whole dedup
-    * family (this IS Stages.docShingles' derivation): MinHash bands are
-    * computed from the STRING shingles (the md5 bank is defined on
-    * them); everything downstream — the ngram inverted index and the
-    * minhash verify — consumes only the sorted 8-byte dictionary ids,
-    * so the strings never leave this projection.
+    * family (this IS Stages.docShingles' derivation): one walk of the
+    * ShingleMinHash kernel over each document's 3-token windows yields
+    * the sorted 8-byte shingle ids (= Features.dictEncode of the shingle
+    * strings) and the md5-bank minima the `bigint` band keys are cut
+    * from — the same kernel and band keys as the ER records, and no
+    * shingle string is ever built.
     */
   def withShingleBands(documents: DataFrame): DataFrame =
     documents
-      .withColumn("shingles",
-        array_distinct(Features.shingles(TextOps.docTokens(col("text")), 3)))
-      .withColumn("bands", graft.functions.MinHashBands.minhashBands(
-        col("shingles"), Features.NumBands, Features.RowsPerBand))
-      .withColumn("shingle_ids", Features.dictEncode(col("shingles")))
-      .select(col("doc_id"), col("shingle_ids"), col("bands"))
+      .withColumn("sig", ShingleMinHash.signature(TextOps.docTokens(col("text")), 3,
+        Features.NumHashes))
+      .select(col("doc_id"), col("sig.shingle_ids").as("shingle_ids"),
+        ShingleMinHash.bandKeys(col("sig.minima"), Features.NumBands,
+          Features.RowsPerBand).as("bands"))
 
   /** `minhashPairs` over a PRE-COMPUTED (and caller-persisted)
     * (doc_id, shingle_ids, bands) table — the graft.Stages.docShingles

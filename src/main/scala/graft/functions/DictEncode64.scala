@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Dictionary-encode a string array to its sorted distinct xxhash64
@@ -24,7 +24,6 @@ object DictEncode64 {
 
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(Array.empty[Any])
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
@@ -32,22 +31,19 @@ object DictEncode64 {
       hs(i) = XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
       i += 1
     }
+    sortedDistinct(hs)
+  }
+
+  /** `hs` sorted ascending (signed) without repeats; sorts `hs` in place. */
+  private[functions] def sortedDistinct(hs: Array[Long]): ArrayData = {
     java.util.Arrays.sort(hs)
-    var m = 1
-    i = 1
-    while (i < n) {
-      if (hs(i) != hs(i - 1)) m += 1
+    var m = 0
+    var i = 0
+    while (i < hs.length) {
+      if (i == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
       i += 1
     }
-    val out = new Array[Any](m)
-    out(0) = hs(0)
-    var j = 1
-    i = 1
-    while (i < n) {
-      if (hs(i) != hs(i - 1)) { out(j) = hs(i); j += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
+    ArrayData.toArrayData(if (m == hs.length) hs else java.util.Arrays.copyOf(hs, m))
   }
 
   def dictEncode64(values: Column): Column =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.LongType
   *
   *  - token hash = big-endian long of the first 8 md5 bytes — exactly
   *    Features.md5Long64 (= DuckDB's ('0x'||substr(md5(t),1,16))
-  *    ::UBIGINT), same digest slice MinHashBands already uses for h1;
+  *    ::UBIGINT), same digest slice ShingleMinHash already uses for h1;
   *  - per-bit votes: bit i of the hash votes +1/-1 on vote i;
   *  - signature fold MSB-first: vote i lands at signature bit 63-i
   *    (acc = (acc << 1) | (vote > 0)) — the same left-to-right fold

@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * the reference's annotated-CSV feature prelude (reference:
   * python/database.py::Database.__init__ [PK-high, SURVEY.md §0]).
   *
-  * Everything here is a pure Catalyst column expression (higher-order
-  * functions, no UDFs) so whole-stage codegen spans the feature stage.
+  * Every feature is a Catalyst column expression or a native kernel
+  * called through `graft.functions.Kernel` (no UDFs); the per-token and
+  * per-shingle loops are kernels, because Spark's higher-order functions
+  * evaluate interpreted (CodegenFallback).
   */
 object Features {
 
@@ -48,16 +50,12 @@ object Features {
 
   /** Canonical (sorted, deduped) value set — the reference keeps features
     * as value *sets* per record (SURVEY.md §1.1); sorted arrays make every
-    * downstream result partition-order-independent.
+    * downstream result partition-order-independent. `sort_array`, not
+    * `array_sort`: the latter's default comparator is a lambda, which
+    * takes the whole projection out of whole-stage codegen; on arrays
+    * without NULLs (tokenize never yields one) both give the same order.
     */
-  def tokenSet(tokens: Column): Column = array_sort(array_distinct(tokens))
-
-  /** F4: word k-shingles via pure HOFs (no UDF). */
-  def shingles(tokens: Column, k: Int): Column =
-    when(size(tokens) >= k,
-      transform(sequence(lit(0), size(tokens) - k),
-        i => concat_ws(" ", (0 until k).map(j => element_at(tokens, i + j + 1)): _*))
-    ).otherwise(array().cast("array<string>"))
+  def tokenSet(tokens: Column): Column = sort_array(array_distinct(tokens))
 
   /** F5: strong key = exact tool-call signature sequence (the
     * transcripts analogue of the reference's high-precision strong
@@ -85,15 +83,15 @@ object Features {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** B4: MinHash-LSH banding is graft.functions.MinHashBands — a native
-    * kernel called from generated code (Spark HOFs evaluate
-    * interpreted). Its hash family is engine-portable (md5-seeded
-    * double hashing), so the executable cross-engine spec of the
-    * semantics is the DuckDB oracle SQL in SparkEntry (er_blocks_minhash), which reproduces every band
-    * key bit-for-bit; a former pure-HOF xxhash64 formulation was
-    * retired with it (engine-specific, and never exercised outside
-    * docs).
+  /** F4 + B4: the MinHash signature of the word k-shingle set, as
+    * `NumHashes` unsigned minima (graft.functions.ShingleMinHash — one
+    * kernel walks the token windows, no shingle string is built). Its
+    * hash family is engine-portable (md5-seeded double hashing), so the
+    * executable cross-engine spec is the DuckDB oracle SQL in SparkEntry
+    * (er_bands_minhash), which reproduces every band label bit-for-bit.
     */
+  def shingleMinima(tokens: Column, k: Int): Column =
+    graft.functions.ShingleMinHash.minima(tokens, k, NumHashes)
 
   /** Engine-portable 64-bit string hash: the first 16 hex chars of md5,
     * assembled from two 32-bit halves with bit-ops only (long ARITHMETIC
@@ -167,8 +165,10 @@ object Features {
 
   /** Enrich collapsed records with every feature the pipeline needs.
     * Input: collapse() output. Output adds:
-    * text_all, first_text, n_turns, ts0, tokens, token_set, token_ids,
-    * shingles, strong_keys, minhash (signature), mh_bands.
+    * text_all, first_text, n_turns, ts0, token_set, token_ids,
+    * strong_keys, mh_minima (the shingle MinHash signature). The token
+    * sequence and the shingles are intermediate: no stage reads them,
+    * and `er_tokens`/`er_shingles` size them from text_all.
     */
   def enrich(records: DataFrame, shingleK: Int = 3): DataFrame = {
     val withText = records
@@ -177,13 +177,14 @@ object Features {
       .withColumn("first_text", element_at(col("turns"), 1).getField("text"))
       .withColumn("n_turns", size(col("turns")))
       .withColumn("ts0", element_at(col("turns"), 1).getField("ts"))
+      // the higher-order functions over turns evaluate interpreted, so they
+      // share one projection; every token feature after it is codegen'd
+      .withColumn("strong_keys", strongKeys(col("turns")))
     withText
       .withColumn("tokens", tokenize(col("text_all")))
       .withColumn("token_set", tokenSet(col("tokens")))
       .withColumn("token_ids", dictEncode(col("token_set")))
-      .withColumn("shingles", array_distinct(shingles(col("tokens"), shingleK)))
-      .withColumn("strong_keys", strongKeys(col("turns")))
-      .withColumn("mh_bands",
-        graft.functions.MinHashBands.minhashBands(col("shingles"), NumBands, RowsPerBand))
+      .withColumn("mh_minima", shingleMinima(col("tokens"), shingleK))
+      .drop("tokens")
   }
 }

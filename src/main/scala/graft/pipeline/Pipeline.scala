@@ -113,18 +113,30 @@ object Pipeline {
     private val io = new ParquetTableIO(cfg.checkpointRoot)
     private lazy val fp = s"${fingerprint(transcripts)}-${configFingerprint(cfg)}"
     private val outcomes = TrieMap.empty[String, Boolean]
+    private val ownSeconds = TrieMap.empty[String, Double]
 
     /** Whether stage `name` was resumed from its checkpoint. */
     def resumed(name: String): Boolean = outcomes.getOrElse(name, false)
 
+    /** Wall seconds stage `name` spent computing or resuming itself,
+      * without the upstream nodes it forced first.
+      */
+    def seconds(name: String): Double = ownSeconds.getOrElse(name, 0.0)
+
+    private def timed[T](name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      try f finally ownSeconds(name) = seconds(name) + (System.nanoTime() - t0) / 1e9
+    }
+
     /** Stage `name`; the nodes it `reads` are passed by value, so they
       * are forced first even when this stage resumes without them.
       */
-    private def stage(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame = {
-      val (df, hit) = io.computeOrResume(spark, name, fp, cfg.runId)(compute)
-      outcomes(name) = hit
-      df
-    }
+    private def stage(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame =
+      timed(name) {
+        val (df, hit) = io.computeOrResume(spark, name, fp, cfg.runId)(compute)
+        outcomes(name) = hit
+        df
+      }
 
     lazy val records: DataFrame = {
       val recs = stage("records")(Features.enrich(Collapse.collapse(transcripts)))
@@ -135,7 +147,7 @@ object Pipeline {
       // file carrying the full (input × config × code) fingerprint
       // records that THIS checkpoint state passed; any change that would
       // recompute records also invalidates the marker.
-      if (cfg.auditInvariant) {
+      if (cfg.auditInvariant) timed("records") {
         val auditMarker = Paths.get(cfg.checkpointRoot, "records", "_audit_fp")
         val alreadyAudited =
           Files.exists(auditMarker) && Files.readString(auditMarker) == fp

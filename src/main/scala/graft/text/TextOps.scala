@@ -73,7 +73,12 @@ object TextOps {
     * md5(full token string) for very short documents.
     */
   def fingerprint(tokens: Column): Column = {
-    val sh = Features.shingles(tokens, 3)
+    // shingle strings, not ShingleMinHash: the fingerprint is a shingle's
+    // whole md5 hex, of which the kernel keeps only bank minima
+    val sh = when(size(tokens) >= 3,
+      transform(sequence(lit(0), size(tokens) - 3),
+        i => concat_ws(" ", (0 until 3).map(j => element_at(tokens, i + j + 1)): _*))
+    ).otherwise(array().cast("array<string>"))
     when(size(sh) > 0, array_min(transform(sh, s => md5(s))))
       .otherwise(md5(concat_ws(" ", tokens)))
   }

@@ -2,11 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.ShingleMinHash
 import graft.model.TranscriptRow
-import graft.ops.{Collapse, Features}
+import graft.ops.{Blocking, Collapse, Features}
 
 class CollapseSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -59,20 +62,30 @@ class CollapseSpec extends AnyFunSuite {
 
   test("enrich: text_all, tokens, shingles, strong keys") {
     val recs = Features.enrich(Collapse.collapse(fixture))
-    val c1 = recs.filter($"conv_id" === "c1").head()
+    // the token sequence and the shingles are sized from text_all, not stored
+    assert(!recs.columns.contains("tokens") && !recs.columns.contains("shingles"))
+    val shingleIds = ShingleMinHash.signature(Features.tokenize($"text_all"), 3,
+      Features.NumHashes).getField("shingle_ids")
+    val withDerived = recs.withColumn("tokens", Features.tokenize($"text_all"))
+      .withColumn("shingle_ids", shingleIds)
+    val c1 = withDerived.filter($"conv_id" === "c1").head()
     def arr(row: org.apache.spark.sql.Row, name: String): Seq[String] =
       row.getAs[scala.collection.Seq[String]](name).toSeq
+    def ids(row: org.apache.spark.sql.Row): Seq[Long] =
+      row.getAs[scala.collection.Seq[Long]]("shingle_ids").toSeq
     assert(c1.getAs[String]("text_all") == "alpha beta beta gamma gamma delta")
     assert(arr(c1, "tokens") ==
       Seq("alpha", "beta", "beta", "gamma", "gamma", "delta"))
     assert(arr(c1, "token_set") == Seq("alpha", "beta", "delta", "gamma"))
-    assert(arr(c1, "shingles").contains("alpha beta beta"))
+    val alphaBetaBeta = XXH64.hashUTF8String(UTF8String.fromString("alpha beta beta"), 42L)
+    assert(ids(c1).contains(alphaBetaBeta))
     assert(arr(c1, "strong_keys") == Seq("T:8:calc(a2)"))
     assert(c1.getAs[Int]("n_turns") == 3)
-    val c2 = recs.filter($"conv_id" === "c2").head()
+    val c2 = withDerived.filter($"conv_id" === "c2").head()
     assert(arr(c2, "strong_keys") == Seq("T:10:search(a1)"))
-    // shingles of a 2-token conv are empty, not an error
-    assert(arr(c2, "shingles").isEmpty)
+    // shingles of a 2-token conv are empty, not an error: no ids, no minima
+    assert(ids(c2).isEmpty)
+    assert(c2.getAs[scala.collection.Seq[Long]]("mh_minima").isEmpty)
   }
 
   test("strong keys are injective across delimiter-containing tool names") {
@@ -95,10 +108,14 @@ class CollapseSpec extends AnyFunSuite {
 
   test("minhash bands: identical token sets share all bands, stable") {
     val recs = Features.enrich(Collapse.collapse(fixture))
-    val bands1 = recs.filter($"conv_id" === "c1").select($"mh_bands").as[Seq[String]].head()
-    val again = Features.enrich(Collapse.collapse(fixture))
-      .filter($"conv_id" === "c1").select($"mh_bands").as[Seq[String]].head()
+    def bands(df: org.apache.spark.sql.DataFrame) =
+      Blocking.minhashBlocks(df.filter($"conv_id" === "c1"))
+        .select($"bkey").as[Long].collect().toSeq
+    val bands1 = bands(recs)
+    val again = bands(Features.enrich(Collapse.collapse(fixture)))
     assert(bands1 == again)
     assert(bands1.size == Features.NumBands)
+    val minima = recs.filter($"conv_id" === "c1").select($"mh_minima").as[Seq[Long]].head()
+    assert(minima.size == Features.NumHashes)
   }
 }

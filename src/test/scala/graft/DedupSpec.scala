@@ -50,6 +50,18 @@ class DedupSpec extends AnyFunSuite {
     assert(!got.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("shingle bands: identical docs share every bigint band, none below 3 tokens") {
+    val short = Seq((6L, "just two")).toDF("doc_id", "text")
+    val rows = Dedup.withShingleBands(docs.unionByName(short))
+      .select("doc_id", "shingle_ids", "bands").as[(Long, Seq[Long], Seq[Long])]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(rows(1L)._2.size == graft.ops.Features.NumBands)
+    assert(rows(2L) == rows(1L) && rows(5L) == rows(1L)) // same normalized shingle set
+    assert(rows(3L)._2.intersect(rows(1L)._2).nonEmpty)  // near-dup shares a band
+    assert(rows(4L)._2.intersect(rows(1L)._2).isEmpty)
+    assert(rows(6L) == ((Seq.empty[Long], Seq.empty[Long])))
+  }
+
   test("simhash: identical docs at hamming 0; unrelated docs not paired") {
     val got = Dedup.simhashPairs(docs, 3)
       .select("a_doc", "b_doc", "hamming").as[(Long, Long, Long)].collect()

@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ann.Ann
 import graft.functions._
 
-/** Bit-equivalence pins for the round-6 native kernels (DotFold,
-  * Simhash64, DictEncode64) against the interpreted HOF formulations they
-  * replaced. The HOF reference implementations are reconstructed INLINE
+/** Bit-equivalence pins for the native kernels (DotFold, Simhash64,
+  * DictEncode64, ShingleMinHash) against the interpreted HOF formulations
+  * they replaced. The HOF reference implementations are reconstructed INLINE
   * here — exactly the expressions the operators used through round 5 —
   * so any IEEE-754 ordering or vote-fold deviation fails the build
   * instead of surfacing as a DuckDB oracle hash mismatch.
@@ -214,8 +214,13 @@ class NativeFoldSpec extends AnyFunSuite {
     (None, Some(Seq(1.0))), (Some(Seq.empty[Double]), Some(Seq.empty[Double])),
     (Some(Seq(1.0, 2.0)), Some(Seq(4.0, 5.0, 6.0))), (Some(Seq(3.0)), Some(Seq(-0.5))))
     .map { case (i, (a, b)) => (i, a, b) }.toDF("id", "a", "b")
+  // as token arrays: rows under 3 tokens (no shingle), empty tokens,
+  // multibyte tokens and repeated windows
   private lazy val textSets = numbered(orNull(texts), 4,
-    None, Some(Seq.empty[String]), Some(Seq("")), Some(Seq("日本語", "tøkens", "aéλ字")))
+    None, Some(Seq.empty[String]), Some(Seq("")), Some(Seq("日本語", "tøkens", "aéλ字")),
+    Some(Seq("a", "b")), Some(Seq("a", "", "b", "")),
+    Some(Seq("日本", "語の", "テキスト", "tøk", "日本", "語の", "テキスト")),
+    Some(Seq.fill(9)("x")))
     .toDF("id", "a")
 
   private def utf8(r: Row, i: Int) = UTF8String.fromString(r.getString(i))
@@ -223,6 +228,39 @@ class NativeFoldSpec extends AnyFunSuite {
     new GenericArrayData(r.getSeq[String](i).map(UTF8String.fromString).toArray[Any])
   private def longs(r: Row, i: Int) = ArrayData.toArrayData(r.getSeq[Long](i).toArray)
   private def doubles(r: Row, i: Int) = ArrayData.toArrayData(r.getSeq[Double](i).toArray)
+
+  /** The word k-shingles as the records were shingled before the
+    * ShingleMinHash kernel: a transform(sequence(…)) lambda.
+    */
+  private def hofShingles(tokens: Column, k: Int): Column =
+    when(size(tokens) >= k,
+      transform(sequence(lit(0), size(tokens) - k),
+        i => concat_ws(" ", (0 until k).map(j => element_at(tokens, i + j + 1)): _*))
+    ).when(tokens.isNotNull, array().cast("array<string>"))
+
+  /** The band labels of 16 bands × 2 rows over a set of shingle STRINGS:
+    * the loop of the MinHashBands kernel ShingleMinHash replaced (md5
+    * per shingle, h1 + i·h2 bank, unsigned minima, "M|b|m0|m1").
+    */
+  private val stringShingleBands = udf { (shingles: Seq[String]) =>
+    if (shingles == null) null
+    else if (shingles.isEmpty) Seq.empty[String]
+    else {
+      val mins = Array.fill(32)(-1L)
+      shingles.foreach { sh =>
+        val d = java.security.MessageDigest.getInstance("MD5")
+          .digest(sh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val h1 = (0 until 8).foldLeft(0L)((h, k) => (h << 8) | (d(k) & 0xFFL))
+        val h2 = (0 until 8).foldLeft(0L)((h, k) => (h << 8) | (d(k + 8) & 0xFFL))
+        (0 until 32).foreach { i =>
+          val v = h1 + i * h2
+          if (java.lang.Long.compareUnsigned(v, mins(i)) < 0) mins(i) = v
+        }
+      }
+      (0 until 16).map(b => s"M|$b|${java.lang.Long.toUnsignedString(mins(2 * b))}|" +
+        java.lang.Long.toUnsignedString(mins(2 * b + 1)))
+    }
+  }
 
   /** One kernel of the table: its column over `input`'s non-id columns,
     * the kernel function called directly on a row without NULLs, and
@@ -261,10 +299,31 @@ class NativeFoldSpec extends AnyFunSuite {
       reference = Some(when(size(col("a")) === size(col("b")),
         aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0),
           (acc, v) => acc + v)))),
-    KernelCase("MinHashBands", textSets,
-      MinHashBands.minhashBands(col("a"), 4, 2),
-      r => MinHashBands.compute(strings(r, 1), 4, 2).toObjectArray(StringType).toSeq
-        .map(_.toString), rejectsNullElement = true),
+    KernelCase("ShingleMinHash", textSets,
+      ShingleMinHash.bandLabels(ShingleMinHash.minima(col("a"), 3, 32), 16, 2),
+      r => ShingleMinHash.bandLabels(ShingleMinHash.compute(strings(r, 1), 3, 32), 16, 2)
+        .toObjectArray(StringType).toSeq.map(_.toString), rejectsNullElement = true,
+      reference = Some(stringShingleBands(array_distinct(hofShingles(col("a"), 3))))),
+    KernelCase("ShingleMinHash.signature", textSets,
+      ShingleMinHash.signature(col("a"), 3, 32),
+      r => {
+        val sig = ShingleMinHash.signature(strings(r, 1), 3, 32)
+        Seq(sig.getArray(0).toLongArray().toSeq, sig.getArray(1).toLongArray().toSeq)
+      }, rejectsNullElement = true,
+      // the shingle ids are the dictionary ids of the shingle strings
+      reference = Some(when(col("a").isNotNull, struct(ShingleMinHash.minima(col("a"), 3, 32),
+        graft.ops.Features.dictEncode(array_distinct(hofShingles(col("a"), 3))))))),
+    KernelCase("ShingleMinHash.bandKeys", textSets,
+      ShingleMinHash.bandKeys(ShingleMinHash.minima(col("a"), 3, 32), 16, 2),
+      r => ShingleMinHash.bandKeys(ShingleMinHash.compute(strings(r, 1), 3, 32), 16, 2)
+        .toLongArray().toSeq,
+      reference = Some {
+        // Spark's own tagged xxhash64 chain over (band, its two minima)
+        val m = ShingleMinHash.minima(col("a"), 3, 32)
+        when(size(m) > 0, array((0 until 16).map(b => xxhash64(lit("minhash"), lit(b.toLong),
+          element_at(m, 2 * b + 1), element_at(m, 2 * b + 2))): _*))
+          .when(size(m) === 0, array().cast("array<bigint>"))
+      }),
     KernelCase("Simhash64", textSets,
       Simhash64.simhash64(col("a")),
       r => Simhash64.compute(strings(r, 1)), rejectsNullElement = true),
@@ -272,10 +331,13 @@ class NativeFoldSpec extends AnyFunSuite {
       DictEncode64.dictEncode64(col("a")),
       r => DictEncode64.compute(strings(r, 1)).toLongArray().toSeq, rejectsNullElement = true))
 
-  /** Doubles by raw bits, arrays as lists: exact comparison of results. */
+  /** Doubles by raw bits, arrays and structs as lists: exact comparison
+    * of results.
+    */
   private def exact(v: Any): Any = v match {
     case d: Double => bits(d)
     case s: scala.collection.Seq[_] => s.map(exact).toList
+    case r: Row => r.toSeq.map(exact).toList
     case x => x
   }
 

@@ -1,10 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, ConcatWs, Sequence}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftListenerBus
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
 import graft.ops._
+import graft.pipeline.Pipeline
 
 /** Asserted version of the `graft.PlanAudit` main: the physical-plan
   * properties that matter at 100 TB must FAIL the build when they
@@ -50,14 +61,63 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  /** The executed plans of every query `body` runs. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; GraftListenerBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("pairs node: the sizing join and the self-join key on bigint bkey") {
+    withAqeOff {
+      val root = Files.createTempDirectory("graft-plan-")
+      try {
+        val g = new Pipeline.Graph(spark, TranscriptGen.transcripts(spark, 200).toDF(),
+          Pipeline.Config(root.toString))
+        g.blocks
+        val perPlan = executedPlans(g.pairs).map(PlanAudit.joinKeyTypes(_, "bkey"))
+        // the self-join's plan reads the sized blocks from the cache, whose
+        // plan holds the sizing join: two joins, four bkey key sides
+        assert(perPlan.map(_.size).max >= 4, s"bkey joins per plan: ${perPlan.map(_.size)}")
+        assert(perPlan.flatten.distinct == Seq(LongType),
+          s"bkey join keys must be 8-byte, got ${perPlan.flatten.distinct}")
+      } finally Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+    }
+  }
+
+  test("records plan: shingles hashed by one codegen'd kernel call, no transform(sequence)") {
+    withAqeOff {
+      val plan = records.queryExecution.executedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      assert(!exprs.exists(_.exists(_.isInstanceOf[Sequence])), "a sequence() in the records plan")
+      assert(!exprs.exists(_.exists {
+        case t: ArrayTransform => t.function.exists(_.isInstanceOf[ConcatWs])
+        case _ => false
+      }), "shingle strings built by a transform lambda")
+      val codegenProjects = formatted(records).split("\n\n").filter(_.matches(
+        "(?s)\\(\\d+\\) Project \\[codegen id : \\d+\\].*"))
+      assert(codegenProjects.exists(
+        _.contains("static_invoke(graft.functions.ShingleMinHash.compute(")),
+        "ShingleMinHash is not called inside a codegen'd Project of the records plan")
+    }
+  }
+
   test("incremental attach plan: token index joins on dictionary ids, no cartesian") {
     withAqeOff {
       val catalog = Entities.fuse(records,
         records.select(col("conv_id"), col("conv_id").as("entity_id")))
       val attached = Incremental.attach(records.limit(20), catalog)
       assert(!formatted(attached).contains("Cartesian"))
-      val tokTypes = PlanAudit.tokJoinKeyTypes(
-        attached.queryExecution.executedPlan).distinct
+      val tokTypes = PlanAudit.joinKeyTypes(
+        attached.queryExecution.executedPlan, "tok").distinct
       assert(tokTypes == Seq(org.apache.spark.sql.types.LongType),
         s"token-index join keys must be the 8-byte dictionary ids, got $tokTypes")
     }
