@@ -45,9 +45,6 @@ object Tiers {
   /** The production pipeline's checkpoint root for `tier`. */
   def checkpointRoot(tier: Tier): String = s"$TargetRoot/graft-ckpt/${tier.name}"
 
-  /** Where `Stages` keeps the stages it derives beyond the pipeline's. */
-  val StagesRoot = s"$TargetRoot/graft-stages"
-
   def transcriptsPath(tier: Tier): String = s"${dataDir(tier)}/transcripts.parquet"
   def labelsPath(tier: Tier): String = s"${dataDir(tier)}/labels.parquet"
 

@@ -18,41 +18,24 @@ import org.apache.spark.sql.types._
 
 import graft.util.Observed
 
-/** Stage checkpoint I/O with manifests and per-partition lineage/metrics
-  * rows (BASELINE.json north_star: "checkpoint every stage ... with
-  * per-partition lineage + metrics rows so any run resumes idempotently
-  * mid-clustering").
+/** Stage checkpoints as parquet with `_manifest.json` sidecars and
+  * per-partition lineage/metrics rows (BASELINE.json north_star:
+  * "checkpoint every stage ... with per-partition lineage + metrics rows
+  * so any run resumes idempotently mid-clustering").
   *
-  * The sandbox has no Iceberg jars (SURVEY.md §0 [SB]), so the cluster
-  * deployment's Iceberg catalog sits behind this seam: `ParquetTableIO`
-  * implements it as partitioned parquet + `_manifest.json` sidecars; an
-  * Iceberg implementation swaps `writeTo(...).append` in without touching
-  * pipeline code.
-  */
-trait TableIO {
-  def exists(stage: String): Boolean
-  def read(spark: SparkSession, stage: String): DataFrame
-  /** Write the stage output + manifest + metrics rows; returns a re-read
-    * of the materialized data (plan truncation for iterative callers).
-    */
-  def write(df: DataFrame, stage: String, runId: String,
-      inputFingerprint: String): DataFrame
-  def dropFrom(stage: String): Unit
-}
-
-/** A checkpoint costs exactly one Spark execution — the write itself.
+  * A checkpoint costs exactly one Spark execution — the write itself.
   * The manifest's row count is observed in-band on the written frame,
   * the lineage rows come from the footers of the part files just
   * written (driver-side, no rescan), and the read-back reuses the
   * frame's schema (no inference job).
   */
-class ParquetTableIO(root: String) extends TableIO {
+class ParquetTableIO(root: String) {
 
   private def dataPath(stage: String) = s"$root/$stage/data"
   private def manifestPath(stage: String) = s"$root/$stage/_manifest.json"
   private def metricsPath(stage: String) = s"$root/$stage/_metrics"
 
-  override def exists(stage: String): Boolean =
+  def exists(stage: String): Boolean =
     Files.exists(Paths.get(manifestPath(stage))) &&
       Files.exists(Paths.get(dataPath(stage), "_SUCCESS"))
 
@@ -70,7 +53,7 @@ class ParquetTableIO(root: String) extends TableIO {
         .findFirstMatchIn(m).map(_.group(1))
     }
 
-  override def read(spark: SparkSession, stage: String): DataFrame =
+  def read(spark: SparkSession, stage: String): DataFrame =
     spark.read.parquet(dataPath(stage))
 
   /** Compute-or-resume, the freshness rule of every checkpoint: the
@@ -87,7 +70,10 @@ class ParquetTableIO(root: String) extends TableIO {
       (write(compute, stage, runId, inputFingerprint), false)
     }
 
-  override def write(df: DataFrame, stage: String, runId: String,
+  /** Write the stage output + manifest + metrics rows; returns a re-read
+    * of the materialized data (plan truncation for iterative callers).
+    */
+  def write(df: DataFrame, stage: String, runId: String,
       inputFingerprint: String): DataFrame = {
     val spark = df.sparkSession
     val t0 = System.currentTimeMillis()
@@ -153,7 +139,7 @@ class ParquetTableIO(root: String) extends TableIO {
     } finally writer.close()
   }
 
-  override def dropFrom(stage: String): Unit = {
+  def dropFrom(stage: String): Unit = {
     val p = Paths.get(root, stage)
     if (Files.exists(p)) {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())

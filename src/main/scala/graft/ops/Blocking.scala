@@ -102,12 +102,25 @@ object Blocking {
   def singleBlock(records: DataFrame): DataFrame =
     records.select(col("conv_id"), lit(0L).as("bkey"))
 
-  /** All block families unioned (strong ∪ rare-token ∪ LSH ∪ time). */
+  /** The one-byte `family` tag of each `allBlocks` row. */
+  object Family {
+    val Strong: Byte = 0
+    val Token: Byte = 1
+    val Minhash: Byte = 2
+    val Time: Byte = 3
+  }
+
+  /** All block families unioned (strong ∪ rare-token ∪ LSH ∪ time), each
+    * row tagged with its `Family`: (conv_id, bkey, family). Pair
+    * generation and block sizing read only `bkey` and `conv_id`.
+    */
   def allBlocks(records: DataFrame, tokenDfCap: Int = DefaultTokenDfCap): DataFrame =
-    strongBlocks(records)
-      .unionByName(tokenBlocks(records, tokenDfCap))
-      .unionByName(minhashBlocks(records))
-      .unionByName(timeBlocks(records))
+    Seq(Family.Strong -> strongBlocks(records),
+      Family.Token -> tokenBlocks(records, tokenDfCap),
+      Family.Minhash -> minhashBlocks(records),
+      Family.Time -> timeBlocks(records))
+      .map { case (f, b) => b.withColumn("family", lit(f)) }
+      .reduce(_ unionByName _)
 
   /** Per-key block sizes — telemetry + input to the cap/salt decisions
     * (reference BlockingScheme.max_block_size analogue).

@@ -18,7 +18,7 @@ import graft.util.{Hashing, Observed}
 /** EP1′ (SURVEY.md §3.2): the flagship end-to-end ER run —
   * transcripts → collapse → features → blocks → candidate pairs →
   * scored pairs → connected-components loop → entity labels — with every
-  * stage checkpointed through TableIO and manifest-driven resume: a
+  * stage checkpointed through ParquetTableIO and manifest-driven resume: a
   * rerun (including a kill mid-clustering) skips stages whose manifest
   * carries the same input fingerprint, so the run is idempotent
   * (BASELINE.json north_rule "resumable from checkpoint").
@@ -31,8 +31,7 @@ object Pipeline {
       jaccardThreshold: Double = Scoring.DefaultJaccardThreshold,
       tokenDfCap: Int = Blocking.DefaultTokenDfCap,
       pairCfg: Pairs.PairConfig = Pairs.PairConfig(),
-      runId: String = "run0",
-      auditInvariant: Boolean = true)
+      runId: String = "run0")
 
   /** What the `scored` checkpoint holds: the pair, its features, score
     * and decision — not the hydrated payload (token ids, first text,
@@ -105,6 +104,12 @@ object Pipeline {
         .map(j => s"$j:${listing(Paths.get(j))}").sorted.mkString("\n"))
     }
 
+  /** A node or an input of a graph: its frame, whether it resumed, its
+    * own seconds, and the listings of the out-of-graph files it reads.
+    */
+  private final case class Built(df: DataFrame, resumed: Boolean, seconds: Double,
+      files: Set[String])
+
   /** The stage graph of one run: each node is computed or resumed on
     * first access, after the nodes it reads, so a resumed node still
     * re-runs the audit and the dropped-block warning upstream of it.
@@ -112,34 +117,42 @@ object Pipeline {
   final class Graph(spark: SparkSession, transcripts: DataFrame, cfg: Config) {
     private val io = new ParquetTableIO(cfg.checkpointRoot)
     private lazy val fp = s"${fingerprint(transcripts)}-${configFingerprint(cfg)}"
-    private val outcomes = TrieMap.empty[String, Boolean]
-    private val ownSeconds = TrieMap.empty[String, Double]
+    /** The nodes by name and the inputs by path. */
+    private val built = TrieMap.empty[String, Built]
 
-    /** Whether stage `name` was resumed from its checkpoint. */
-    def resumed(name: String): Boolean = outcomes.getOrElse(name, false)
+    /** Whether node `name` was resumed from its checkpoint. */
+    def resumed(name: String): Boolean = built.get(name).exists(_.resumed)
 
-    /** Wall seconds stage `name` spent computing or resuming itself,
+    /** Wall seconds node `name` spent computing or resuming itself,
       * without the upstream nodes it forced first.
       */
-    def seconds(name: String): Double = ownSeconds.getOrElse(name, 0.0)
+    def seconds(name: String): Double = built.get(name).fold(0.0)(_.seconds)
 
-    private def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      try f finally ownSeconds(name) = seconds(name) + (System.nanoTime() - t0) / 1e9
-    }
-
-    /** Stage `name`; the nodes it `reads` are passed by value, so they
-      * are forced first even when this stage resumes without them.
+    /** The parquet data at `path`, a file outside the graph, as a node
+      * input: a node that reads it, directly or through other nodes,
+      * carries its `listing` in its fingerprint.
       */
-    private def stage(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame =
-      timed(name) {
-        val (df, hit) = io.computeOrResume(spark, name, fp, cfg.runId)(compute)
-        outcomes(name) = hit
-        df
-      }
+    def input(path: String): DataFrame = built.getOrElseUpdate(path,
+      Built(spark.read.parquet(path), resumed = true, 0.0, Set(listing(Paths.get(path))))).df
+
+    /** Node `name`, computed or resumed once per graph. The nodes and
+      * inputs it `reads` are passed by value, so they are forced first
+      * even when this node resumes without them, and its seconds are its
+      * own. Its fingerprint is the graph's, extended by the listings of
+      * the inputs it reads.
+      */
+    def node(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame =
+      built.getOrElseUpdate(name, {
+        val files = reads.flatMap(r => built.values.find(_.df eq r).toSeq.flatMap(_.files)).toSet
+        val nodeFp =
+          if (files.isEmpty) fp else s"$fp-${Hashing.md5Hex(files.toSeq.sorted.mkString("\n"))}"
+        val t0 = System.nanoTime()
+        val (df, hit) = io.computeOrResume(spark, name, nodeFp, cfg.runId)(compute)
+        Built(df, hit, (System.nanoTime() - t0) / 1e9, files)
+      }).df
 
     lazy val records: DataFrame = {
-      val recs = stage("records")(Features.enrich(Collapse.collapse(transcripts)))
+      val recs = node("records")(Features.enrich(Collapse.collapse(transcripts)))
       // The audit re-derives collapse∘explode over every turn — the right
       // gate for a fresh records stage, but pure waste on every warm rerun
       // of an already-audited checkpoint (measured ~28 s per Pipeline.run
@@ -147,22 +160,18 @@ object Pipeline {
       // file carrying the full (input × config × code) fingerprint
       // records that THIS checkpoint state passed; any change that would
       // recompute records also invalidates the marker.
-      if (cfg.auditInvariant) timed("records") {
-        val auditMarker = Paths.get(cfg.checkpointRoot, "records", "_audit_fp")
-        val alreadyAudited =
-          Files.exists(auditMarker) && Files.readString(auditMarker) == fp
-        if (!alreadyAudited) {
-          val violations = Collapse.invariantViolations(transcripts, recs).count()
-          require(violations == 0L,
-            s"per-turn text-equality invariant violated: $violations rows")
-          Files.writeString(auditMarker, fp)
-        }
+      val auditMarker = Paths.get(cfg.checkpointRoot, "records", "_audit_fp")
+      if (!Files.exists(auditMarker) || Files.readString(auditMarker) != fp) {
+        val violations = Collapse.invariantViolations(transcripts, recs).count()
+        require(violations == 0L,
+          s"per-turn text-equality invariant violated: $violations rows")
+        Files.writeString(auditMarker, fp)
       }
       recs
     }
 
     lazy val blocks: DataFrame =
-      stage("blocks", records)(Blocking.allBlocks(records, cfg.tokenDfCap))
+      node("blocks", records)(Blocking.allBlocks(records, cfg.tokenDfCap))
 
     // Dropped-block telemetry: capping is NEVER silent (SURVEY.md §7.4
     // risk 2). The pairs sizing pass counts the over-cap blocks in-band;
@@ -171,7 +180,7 @@ object Pipeline {
     // re-warned on every resume.
     lazy val pairs: DataFrame = {
       val droppedFile = Paths.get(cfg.checkpointRoot, "pairs", "_dropped_blocks.json")
-      val computed = stage("pairs", blocks) {
+      val computed = node("pairs", blocks) {
         val dropped = Observation()
         val p = Pairs.candidatePairs(blocks, cfg.pairCfg, Some(dropped))
         val d = Observed.required(spark, dropped, "dropped-block telemetry")
@@ -190,7 +199,7 @@ object Pipeline {
       computed
     }
 
-    lazy val scored: DataFrame = stage("scored", pairs, records) {
+    lazy val scored: DataFrame = node("scored", pairs, records) {
       Scoring.score(Pairs.hydrate(pairs, records), cfg.matchType,
         cfg.jaccardThreshold).select(ScoredColumns.map(col): _*)
     }
@@ -198,9 +207,9 @@ object Pipeline {
     // Each CC iteration checkpoints durably — the "resumes idempotently
     // mid-clustering" requirement: a killed run's completed iterations
     // are read back, not recomputed.
-    lazy val entities: DataFrame = stage("entities", scored, records) {
+    lazy val entities: DataFrame = node("entities", scored, records) {
       ConnectedComponents.run(Scoring.matchEdges(scored), records.select(col("conv_id")),
-        checkpoint = (df, i) => stage(s"cc_iter_$i")(df))
+        checkpoint = (df, i) => node(s"cc_iter_$i")(df))
     }
   }
 

@@ -156,6 +156,29 @@ class PipelineSpec extends AnyFunSuite {
     deleteRecursively(code)
   }
 
+  test("a node reading a file outside the graph resumes until that file changes") {
+    val transcripts = TranscriptGen.transcripts(spark, 20).toDF()
+    val root = tmpDir("input")
+    val docs = Files.copy(Path.of("/root/testdata/sf0.001/documents.parquet"),
+      Path.of(tmpDir("input-docs"), "documents.parquet"))
+    def runIds(tag: String): Seq[String] = {
+      val g = new Pipeline.Graph(spark, transcripts, Pipeline.Config(root, runId = tag))
+      val in = g.input(docs.toString)
+      val counted = g.node("doc_count", in)(in.groupBy().count())
+      // a node reading that node carries the file's listing as well
+      g.node("doc_total", counted)(counted.select(col("count") + 1)).count()
+      Seq("doc_count", "doc_total").map(st => """"run_id":"([^"]*)"""".r
+        .findFirstMatchIn(Files.readString(Path.of(root, st, "_manifest.json"))).get.group(1))
+    }
+    assert(runIds("first") == Seq("first", "first"))
+    assert(runIds("unchanged") == Seq("first", "first"))
+    Files.setLastModifiedTime(docs,
+      FileTime.fromMillis(Files.getLastModifiedTime(docs).toMillis + 1000))
+    assert(runIds("touched") == Seq("touched", "touched"))
+    deleteRecursively(Path.of(root))
+    deleteRecursively(docs.getParent)
+  }
+
   /** The `[pipeline] dropped …` lines `body` prints on stderr. */
   private def droppedLines(body: => Unit): Seq[String] = {
     val buf = new ByteArrayOutputStream

@@ -17,9 +17,9 @@ import graft.gen.TranscriptGen
 import graft.ops._
 import graft.pipeline.Pipeline
 
-/** Asserted version of the `graft.PlanAudit` main: the physical-plan
-  * properties that matter at 100 TB must FAIL the build when they
-  * regress, not just print false in a manually-run report. AQE is
+/** The physical-plan properties that matter at 100 TB, asserted: they
+  * must FAIL the build when they regress (`graft.PlanAudit` dumps the
+  * executed plans of named queries for reading). AQE is
   * toggled off around plan construction (finalized adaptive plans hide
   * per-stage codegen wrapping from explain, and the assertions are
   * about the static plan shape; production paths keep AQE on).

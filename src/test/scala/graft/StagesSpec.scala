@@ -1,12 +1,18 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Pairs, Scoring}
+import graft.ops.{Blocking, Pairs, Scoring}
 import graft.pipeline.Pipeline
 
-/** Pins what Stages composes from the pipeline's nodes: the three-family
+/** Pins what Stages composes from the pipeline's nodes: the block
+  * families as `family` filters of the `blocks` node, the three-family
   * universe as the SQL universe ∪ the time-family delta, and the scored
   * SQL universe as the pipeline's `scored` node restricted to the SQL
   * universe. Both rest on disjoint bkey namespaces (adding block families
@@ -17,6 +23,29 @@ import graft.pipeline.Pipeline
 class StagesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.001"
+
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.count() == b.count())
+    assert(a.exceptAll(b).isEmpty)
+    assert(b.exceptAll(a).isEmpty)
+  }
+
+  test("block families are served from the blocks node, which they partition") {
+    val records = Stages.records(spark, dir)
+    assertSameRows(Stages.strongBlocks(spark, dir), Blocking.strongBlocks(records))
+    assertSameRows(Stages.tokenBlocks(spark, dir), Blocking.tokenBlocks(records))
+    assertSameRows(Stages.timeBlocks(spark, dir), Blocking.timeBlocks(records))
+    val root = Tiers.checkpointRoot(Tiers.tierFor(dir))
+    val blocks = spark.read.parquet(s"$root/blocks/data")
+    val families = Seq(Blocking.Family.Strong, Blocking.Family.Token,
+      Blocking.Family.Minhash, Blocking.Family.Time)
+    assert(families.distinct.size == 4)
+    assert(blocks.filter(col("family").isin(families: _*)).count() == blocks.count())
+    assertSameRows(blocks.filter(col("family") === Blocking.Family.Minhash)
+      .select("conv_id", "bkey"), Blocking.minhashBlocks(records))
+    val stageDirs = Files.list(Path.of(root)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!stageDirs.exists(_.startsWith("blocks_")), s"block family stages in $stageDirs")
+  }
 
   test("delta-composed fullPairs equals candidatePairs over all four families") {
     val composed = Stages.fullPairs(spark, dir)
