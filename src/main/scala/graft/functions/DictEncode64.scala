@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * ids as ONE native kernel — the hot-loop form of
   * `array_sort(array_distinct(transform(x, xxhash64)))`
   * (Features.dictEncode), whose `transform` HOF is CodegenFallback and
-  * whose distinct/sort each allocate per row. The swoosh refine path
-  * re-encodes every fused entity's token UNION per round, and every
-  * records/catalog build pays it per row.
+  * whose distinct/sort each allocate per row. Every records build pays
+  * it per row.
   *
   * Value-identical to the HOF formulation (NativeFoldSpec pins raw
   * equality): each element hashed with Spark's own XXH64 at the

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.DoubleType
   * the shuffled/cached pair payload and the per-pair memory traffic drop
   * several-fold. Memory bandwidth was the measured non-scaling term in
   * the 8-core vs 32-core comparison (BENCH.md round 1). Every caller
-  * passes such ids: scoring's token_ids, attach's e_token_ids and dedup's
-  * shingle_ids.
+  * passes such ids: the token_ids of records and fused entities, and
+  * dedup's shingle_ids.
   *
   * Semantics are bit-identical to
   * size(array_intersect)/size(array_union) on sorted-distinct inputs

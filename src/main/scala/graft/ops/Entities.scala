@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** R3/A1 (SURVEY.md §2.2/§2.6): record fusion — the materialized entity
   * table. The reference's core data structure is the merged record:
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * per-feature set union).
   *
   * Spark formulation: one hash aggregate keyed by entity_id. The union
-  * aggregates (collect_list → flatten → array_distinct → array_sort) are
+  * aggregates (collect_list → flatten → array_distinct → sort_array) are
   * associative and commutative, so Spark executes them as partial +
   * final aggregation — map-side combine keeps the shuffle proportional
   * to the number of entities, not records. Sorted-array canonical form
@@ -21,12 +22,13 @@ object Entities {
 
   /** records (Features.enrich output) × labels(conv_id, entity_id) →
     * entities(entity_id, members, n_members, token_union,
-    * strong_keys_union).
+    * strong_keys_union, token_ids).
     *
     * `members` is the provenance set (the reference's line_indices);
-    * the two unions are the fused weak/strong feature value-sets. This
-    * is also the input a swoosh-style re-score loop would consume
-    * (SURVEY.md §7.4 mitigation 1).
+    * the unions are the fused weak/strong feature value-sets. The union
+    * of the members' `token_ids` equals `Features.dictEncode(token_union)`
+    * (a hash of a union is the union of the hashes), with no token hashed
+    * again.
     *
     * The collect_list buffers are linear in cluster size, so one
     * over-merged component would blow the final-agg task at 100 TB
@@ -42,16 +44,29 @@ object Entities {
         s"clusters (${dRow.getLong(1)} records) from fusion at " +
         s"clusterSizeCap=$clusterSizeCap")
     }
+    def union(c: String): Column = sort_array(array_distinct(flatten(collect_list(col(c)))))
     records
-      .select(col("conv_id"), col("token_set"), col("strong_keys"))
+      .select(col("conv_id"), col("token_set"), col("strong_keys"), col("token_ids"))
       .join(ErMetrics.capClusters(labels, clusterSizeCap), "conv_id")
       .groupBy(col("entity_id"))
       .agg(
         sort_array(collect_list(col("conv_id"))).as("members"),
         count(lit(1)).as("n_members"),
-        array_sort(array_distinct(flatten(collect_list(col("token_set")))))
-          .as("token_union"),
-        array_sort(array_distinct(flatten(collect_list(col("strong_keys")))))
-          .as("strong_keys_union"))
+        union("token_set").as("token_union"),
+        union("strong_keys").as("strong_keys_union"),
+        union("token_ids").as("token_ids"))
+  }
+
+  /** Entities as records (conv_id, token_ids, strong_keys) for the
+    * record path's blocking, hydration and set features. A `token_ids`
+    * that is not `array<bigint>` is refused at plan time: Jaccard over it
+    * would not be the batch path's score.
+    */
+  def asRecords(entities: DataFrame): DataFrame = {
+    val ids = entities.schema("token_ids").dataType
+    require(PartialFunction.cond(ids) { case ArrayType(LongType, _) => true },
+      s"entity token_ids must be array<bigint> (Entities.fuse), got ${ids.simpleString}")
+    entities.select(col("entity_id").as("conv_id"), col("token_ids"),
+      col("strong_keys_union").as("strong_keys"))
   }
 }

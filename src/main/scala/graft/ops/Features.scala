@@ -37,13 +37,16 @@ object Features {
   val RowsPerBand = 2
   val NumHashes: Int = NumBands * RowsPerBand
 
-  /** F3: unicode-aware lowercase word tokenizer. trim+guard instead of a
-    * filter() HOF — higher-order functions are CodegenFallback
-    * (interpreted), and separator runs collapse to one space so empties
-    * can only appear at the ends anyway.
+  /** F3: unicode-aware lowercase word tokenizer. */
+  def tokenize(text: Column): Column = words(text, "[^\\p{L}\\p{N}]+")
+
+  /** The lowercase words between runs of `separator`, a regex class
+    * that matches the space. trim+guard instead of a filter() HOF (which
+    * is CodegenFallback): separator runs collapse to one space, so
+    * empties can only appear at the ends. A NULL text has no words.
     */
-  def tokenize(text: Column): Column = {
-    val norm = trim(regexp_replace(lower(text), "[^\\p{L}\\p{N}]+", " "))
+  private[graft] def words(text: Column, separator: String): Column = {
+    val norm = trim(regexp_replace(lower(text), separator, " "))
     when(length(norm) > 0, split(norm, " "))
       .otherwise(array().cast("array<string>"))
   }
@@ -153,12 +156,8 @@ object Features {
     * 10¹⁰ tokens at twice the key bytes (still 4-16× narrower than the
     * raw strings). Not done here: the sandbox tiers sit 5 orders of
     * magnitude below where 64-bit exposure becomes measurable.
-    *
-    * Implemented since round 6 as the native kernel
-    * graft.functions.DictEncode64 (the former
-    * array_sort∘array_distinct∘transform(xxhash64) chain evaluated its
-    * transform interpreted per row); values are bit-identical —
-    * NativeFoldSpec pins raw equality against the HOF formulation.
+    * Implemented by the native kernel graft.functions.DictEncode64,
+    * which NativeFoldSpec pins to the HOF formulation.
     */
   def dictEncode(valueSet: Column): Column =
     graft.functions.DictEncode64.dictEncode64(valueSet)

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Incremental resolution: attach NEWLY-INGESTED records to an existing
   * entity catalog without re-clustering the corpus — the production
@@ -13,16 +12,20 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * every production deployment of Swoosh-family ER grows — cf.
   * Benjelloun et al., VLDB J. 2009 §8 incremental variants.)
   *
-  * Design (all shuffles bounded by the same caps as the batch path):
-  *  - the ENTITY side is indexed, not the record side: strong keys and
-  *    df-capped rare tokens of the fused value sets become an inverted
-  *    index (entity_id, key) — linear in catalog size, built once per
-  *    batch and reusable across micro-batches;
-  *  - new records explode their own keys and equi-join the index — the
-  *    per-batch cost is O(batch × keys), independent of corpus size;
-  *  - candidate (record, entity) pairs are scored with the SAME
-  *    weak_strong rule as the batch pipeline (strong overlap OR fused
-  *    token-set Jaccard ≥ τ);
+  * Design (all shuffles bounded by the same caps as the batch path). The
+  * catalog is `Entities.fuse` output; `Entities.asRecords` makes its
+  * entities records, so attach blocks, hydrates and matches through the
+  * record path:
+  *  - the ENTITY side is indexed, not the record side: its strong blocks
+  *    (kept where ≤ strongDfCap entities hold the key) and df-capped
+  *    token blocks (`Blocking`) form one (bkey, entity) index on the
+  *    batch path's `bigint` keys — linear in catalog size;
+  *  - new records explode their strong-key hashes and token ids, with
+  *    no cap, and equi-join the index — the per-batch cost is
+  *    O(batch × keys), independent of corpus size;
+  *  - candidates are hydrated by `Pairs.hydrate` and decided by
+  *    `Scoring.setFeatures` and the SAME weak_strong `Scoring.matchRule`
+  *    as the batch pipeline (strong overlap OR token Jaccard ≥ τ);
   *  - each record attaches to its best match (strong-hit first, then
   *    Jaccard desc, then entity_id asc — fully deterministic), or mints
   *    itself as a new singleton entity (entity_id = conv_id), exactly
@@ -38,9 +41,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
 object Incremental {
 
   /** @param newRecords Features.enrich output for the new batch
-    *   (conv_id, token_set, token_ids, strong_keys, ...)
+    *   (conv_id, token_ids, strong_keys, ...)
     * @param entities   Entities.fuse output for the existing catalog
-    *   (entity_id, token_union, strong_keys_union, ...)
+    *   (entity_id, token_ids, strong_keys_union, ...)
     * @param strongDfCap strong keys held by more entities than this are
     *   excluded from CANDIDATE GENERATION (scoring still sees the full
     *   key sets) — the attach analogue of the batch path's
@@ -55,76 +58,28 @@ object Incremental {
       tokenDfCap: Int = Blocking.DefaultTokenDfCap,
       strongDfCap: Int = Pairs.PairConfig().blockSizeCap): DataFrame = {
     // materialize the slim catalog projection ONCE (same pattern as
-    // Swoosh.refine's fused-catalog checkpoint): it feeds three separate
-    // subtrees of the plan (strong index, token index + df-caps, and the
-    // scoring hydration join), and without this each re-ran the
-    // catalog-wide dictEncode pass. A catalog that already carries
-    // `e_token_ids` (Stages.attachCatalog ships index-ready — what a
-    // production deployment persists with its entity table) skips the
-    // per-batch dictEncode entirely; the ids are the same
-    // Features.dictEncode(token_union) either way, so candidates and
-    // scores are identical. A supplied column of any other type (say,
-    // string tokens under that name) is refused here, at plan time:
-    // jaccard over it would not be the batch path's score.
-    val supplied = entities.schema.find(_.name == "e_token_ids")
-    supplied.foreach { f =>
-      require(f.dataType match {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      }, s"attach: catalog column e_token_ids must be array<bigint> " +
-        s"(Features.dictEncode of token_union), got ${f.dataType.simpleString}")
-    }
-    val ent = (if (supplied.isDefined) {
-      entities.select(col("entity_id"), col("e_token_ids"),
-        col("strong_keys_union"))
-    } else {
-      entities.select(col("entity_id"),
-        Features.dictEncode(col("token_union")).as("e_token_ids"),
-        col("strong_keys_union"))
-    }).localCheckpoint(true)
-    // entity-side inverted indexes; token keys df-capped ON THE CATALOG
-    // (a token present in > cap entities separates nothing). The token
-    // index is keyed by the 8-byte dictionary ids, not the strings —
-    // this is the widest shuffle of the attach (catalog tokens × new
-    // tokens), and ids cut its key bytes several-fold. Identical
-    // candidates and df-caps to a string-keyed index under xxhash64
-    // injectivity-in-practice — the same published argument the jaccard
-    // scoring already rests on (Features.dictEncode scaladoc); the
-    // string-keyed DuckDB oracle stays exact.
-    val strongIdxAll = ent.select(col("entity_id"),
-      explode(col("strong_keys_union")).as("bkey"))
-    val strongIdx = strongIdxAll.join(
-      strongIdxAll.groupBy("bkey").count()
-        .filter(col("count") <= strongDfCap).select("bkey"),
-      Seq("bkey"), "left_semi")
-    val tokIdx = ent.select(col("entity_id"),
-      explode(col("e_token_ids")).as("tok"))
-    val rare = tokIdx.groupBy("tok").count()
-      .filter(col("count") <= tokenDfCap).select("tok")
-    val newSlim = newRecords.select(col("conv_id"),
-      col("token_ids"), col("strong_keys"))
-    val candStrong = newSlim
-      .select(col("conv_id"), explode(col("strong_keys")).as("bkey"))
-      .join(strongIdx, "bkey").select("conv_id", "entity_id")
-    val candTok = newSlim
-      .select(col("conv_id"), explode(col("token_ids")).as("tok"))
-      .join(tokIdx.join(rare, "tok"), "tok").select("conv_id", "entity_id")
-    val cand = candStrong.unionByName(candTok)
-      .dropDuplicates("conv_id", "entity_id")
-    // hydration is slim by construction: ent already carries only the id
-    // arrays + strong keys (token_union was dropped at dictEncode time) —
-    // shipping the wide string sets per candidate pair would double the
-    // join bytes for nothing
-    val scored = cand.join(newSlim, "conv_id").join(ent, "entity_id")
-      .withColumn("strong_hit",
-        arrays_overlap(col("strong_keys"), col("strong_keys_union")))
-      .withColumn("jac", Scoring.jaccard(col("token_ids"), col("e_token_ids")))
-      .filter(col("strong_hit") || col("jac") >= jaccardThreshold)
-    val w = Window.partitionBy(col("conv_id"))
-      .orderBy(col("strong_hit").desc, col("jac").desc, col("entity_id").asc)
-    val best = scored.withColumn("rn", row_number().over(w))
+    // Swoosh.refine's fused-catalog checkpoint): it feeds the strong
+    // index, the token index + df-caps, and the hydration join
+    val catalog = Entities.asRecords(entities).localCheckpoint(true)
+    val strong = Blocking.strongBlocks(catalog)
+    val index = strong
+      .join(Blocking.blockSizes(strong).filter(col("block_size") <= strongDfCap),
+        Seq("bkey"), "left_semi")
+      .unionByName(Blocking.tokenBlocks(catalog, tokenDfCap))
+      .select(col("bkey"), col("conv_id").as("b_id"))
+    val keys = Blocking.strongBlocks(newRecords)
+      .unionByName(newRecords.select(col("conv_id"), explode(col("token_ids")).as("bkey")))
+      .select(col("bkey"), col("conv_id").as("a_id"))
+    val cand = keys.join(index, "bkey").select(col("a_id"), col("b_id"))
+      .dropDuplicates("a_id", "b_id")
+    val matched = Scoring.setFeatures(
+        Pairs.hydrate(cand, newRecords, Scoring.SetColumns, Some(catalog)))
+      .filter(Scoring.matchRule("weak_strong", jaccardThreshold))
+    val w = Window.partitionBy(col("a_id")).orderBy(
+      col("strong_overlap").desc, col("jaccard_tokens").desc, col("b_id").asc)
+    val best = matched.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(col("conv_id"), col("entity_id"))
+      .select(col("a_id").as("conv_id"), col("b_id").as("entity_id"))
     newRecords.select(col("conv_id")).join(best, Seq("conv_id"), "left")
       .select(col("conv_id"),
         coalesce(col("entity_id"), col("conv_id")).as("entity_id"))

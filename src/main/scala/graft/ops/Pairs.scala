@@ -129,8 +129,10 @@ object Pairs {
         greatest(col("a_id"), col("b_id")).as("b_id"))
   }
 
-  /** J3: hydrate pairs with the per-conversation feature columns needed
-    * by scoring. Two equi-joins; Catalyst/AQE broadcast if small.
+  /** J3: hydrate pairs (a_id, b_id, …) with `columns` of each side,
+    * prefixed `a_` and `b_` (default: what Scoring.pairFeatures reads).
+    * Two equi-joins; Catalyst/AQE broadcast if small. The b side is
+    * `bSide` when given (attach: the catalog's `Entities.asRecords`).
     *
     * Ships `token_ids` (sorted 64-bit token hashes), NOT the string
     * token_set: tokens dominated the shuffled/cached bytes per pair, and
@@ -138,14 +140,14 @@ object Pairs {
     * (BENCH.md round 1). Jaccard over the id arrays is value-identical
     * (Features.dictEncode).
     */
-  def hydrate(pairs: DataFrame, records: DataFrame): DataFrame = {
-    val slim = records.select(
-      col("conv_id"), col("token_ids"), col("first_text"),
-      col("strong_keys"), col("ts0"), col("n_turns"))
-    val a = slim.toDF(slim.columns.map("a_" + _): _*)
-    val b = slim.toDF(slim.columns.map("b_" + _): _*)
+  def hydrate(pairs: DataFrame, records: DataFrame,
+      columns: Seq[String] = Seq("token_ids", "first_text", "strong_keys", "ts0", "n_turns"),
+      bSide: Option[DataFrame] = None): DataFrame = {
+    def side(df: DataFrame, p: String) =
+      df.select(("conv_id" +: columns).map(c => col(c).as(p + c)): _*)
     pairs
-      .join(a, col("a_id") === col("a_conv_id")).drop("a_conv_id")
-      .join(b, col("b_id") === col("b_conv_id")).drop("b_conv_id")
+      .join(side(records, "a_"), col("a_id") === col("a_conv_id")).drop("a_conv_id")
+      .join(side(bSide.getOrElse(records), "b_"), col("b_id") === col("b_conv_id"))
+      .drop("b_conv_id")
   }
 }

@@ -43,7 +43,7 @@ object Sampling {
     val ta = truthLabels.select(col("conv_id").as("a_id"), col("entity_id").as("ea"))
     val tb = truthLabels.select(col("conv_id").as("b_id"), col("entity_id").as("eb"))
     pairs.join(ta, "a_id").join(tb, "b_id")
-      .select(pairs.columns.map(col) :+ (col("ea") === col("eb")).as("is_match"): _*)
+      .select(pairs.columns.toIndexedSeq.map(col) :+ (col("ea") === col("eb")).as("is_match"): _*)
   }
 
   /** M4: class-balanced sample of labeled pairs via per-class

@@ -47,51 +47,43 @@ object Scoring {
 
   /** Normalized Levenshtein similarity on short text fields (F7),
     * applied to a bounded prefix (MaxSimTextLen) of first_text, never
-    * text_all; both kernels run inside whole-stage codegen.
-    *
-    * @param fastKernel true (default) → allocation-free capped
-    *   bit-vector kernel (`LevenshteinFast`, value-identical); false → the
-    *   reference configuration over Spark's built-in levenshtein on
-    *   substring'd inputs. Both are kept first-class because they probe
-    *   different hardware regimes: BenchScale measures 8→32-core scaling
-    *   on BOTH (BENCH.md) — the built-in kernel is memory-stall-heavy
-    *   and scales past this host's pure-CPU turbo ceiling, the fast one
-    *   sits exactly on that ceiling.
+    * text_all, by the allocation-free capped bit-vector kernel
+    * (`LevenshteinFast`, value-identical to Spark's built-in levenshtein
+    * on substring'd inputs). The cap lives INSIDE the kernel (and as a
+    * least() on the length), not as substring() columns — substring
+    * allocates a new UTF8String per row per side, and allocation rate is
+    * a measured non-scaling term at 32 cores.
     */
-  def levSim(aRaw: Column, bRaw: Column, fastKernel: Boolean = true): Column = {
-    if (fastKernel) {
-      // the cap lives INSIDE the kernel (and as a least() on the
-      // length), not as substring() columns — substring allocates a new
-      // UTF8String per row per side, and allocation rate is a measured
-      // non-scaling term at 32 cores
-      val maxLen = greatest(
-        least(length(aRaw), lit(MaxSimTextLen)),
-        least(length(bRaw), lit(MaxSimTextLen)))
-      when(maxLen === 0, lit(1.0))
-        .otherwise(lit(1.0) -
-          graft.functions.LevenshteinFast
-            .levenshteinFast(aRaw, bRaw, MaxSimTextLen).cast("double") /
-            maxLen.cast("double"))
-    } else {
-      val a = substring(aRaw, 1, MaxSimTextLen)
-      val b = substring(bRaw, 1, MaxSimTextLen)
-      val maxLen = greatest(length(a), length(b))
-      when(maxLen === 0, lit(1.0))
-        .otherwise(lit(1.0) - levenshtein(a, b).cast("double") / maxLen.cast("double"))
-    }
+  def levSim(aRaw: Column, bRaw: Column): Column = {
+    val maxLen = greatest(
+      least(length(aRaw), lit(MaxSimTextLen)),
+      least(length(bRaw), lit(MaxSimTextLen)))
+    when(maxLen === 0, lit(1.0))
+      .otherwise(lit(1.0) -
+        graft.functions.LevenshteinFast
+          .levenshteinFast(aRaw, bRaw, MaxSimTextLen).cast("double") /
+          maxLen.cast("double"))
   }
 
-  /** M2: pairwise feature vector over a hydrated pair table
-    * (Pairs.hydrate output). Adds: strong_overlap, jaccard_tokens,
-    * lev_first, jw_first, dt_sec, dn_turns.
+  /** The columns `setFeatures` reads of each pair side. */
+  val SetColumns: Seq[String] = Seq("token_ids", "strong_keys")
+
+  /** strong_overlap and jaccard_tokens of a hydrated pair table: the
+    * weak_strong rule's inputs, for records and fused entities alike.
     */
-  def pairFeatures(hydrated: DataFrame, fastKernel: Boolean = true): DataFrame =
+  def setFeatures(hydrated: DataFrame): DataFrame =
     hydrated
       .withColumn("strong_overlap",
         arrays_overlap(col("a_strong_keys"), col("b_strong_keys")))
       .withColumn("jaccard_tokens", jaccard(col("a_token_ids"), col("b_token_ids")))
-      .withColumn("lev_first",
-        levSim(col("a_first_text"), col("b_first_text"), fastKernel))
+
+  /** M2: pairwise feature vector over a hydrated pair table
+    * (Pairs.hydrate output): `setFeatures`, then lev_first, jw_first,
+    * dt_sec, dn_turns.
+    */
+  def pairFeatures(hydrated: DataFrame): DataFrame =
+    setFeatures(hydrated)
+      .withColumn("lev_first", levSim(col("a_first_text"), col("b_first_text")))
       .withColumn("jw_first", jaroWinkler(
         col("a_first_text"), col("b_first_text"), MaxSimTextLen))
       .withColumn("dt_sec",
@@ -168,9 +160,8 @@ object Scoring {
     */
   def score(hydrated: DataFrame,
       matchType: String = "weak_strong",
-      jaccardThreshold: Double = DefaultJaccardThreshold,
-      fastKernel: Boolean = true): DataFrame =
-    pairFeatures(hydrated, fastKernel)
+      jaccardThreshold: Double = DefaultJaccardThreshold): DataFrame =
+    pairFeatures(hydrated)
       .withColumn("score", logisticScore())
       .withColumn("is_match", matchRule(matchType, jaccardThreshold))
 

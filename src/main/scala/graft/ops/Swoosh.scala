@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   *
   * The reference reaches the fixpoint with an in-memory compare/merge
   * queue; here each round is the distributed pipeline re-run at ENTITY
-  * granularity: fuse (Entities.fuse) → re-block the fused value sets →
-  * re-score → re-cluster the entity graph → relabel members. Entity
+  * granularity, through the record path: fuse (Entities.fuse, which
+  * also unions the members' token ids) → Entities.asRecords → strong
+  * and rare-token blocks (Blocking) → Pairs.hydrate of the set columns →
+  * Scoring.setFeatures + the weak_strong Scoring.matchRule → re-cluster
+  * the entity graph → relabel members. Entity
   * counts shrink monotonically, so rounds are cheap relative to the
   * record-level pass, and one round captures the common fragment-bridge
   * cases; run to fixpoint with `refineToFixpoint`.
@@ -57,14 +60,10 @@ object Swoosh {
     // universe), and without the checkpoint each re-ran the whole
     // records×labels fusion agg — the dominant cost of the round at
     // bench tier (round-3 VERDICT: er_f1_swoosh 161 s, mostly re-fusion).
-    val entities =
-      Entities.fuse(records, labels, clusterSizeCap).localCheckpoint(true)
-    // entity-level records: the fused value sets play the per-record role
-    val erecs = entities.select(
-      col("entity_id").as("conv_id"),
-      col("token_union").as("token_set"),
-      graft.ops.Features.dictEncode(col("token_union")).as("token_ids"),
-      col("strong_keys_union").as("strong_keys"))
+    // Only the record-shaped columns a round reads are checkpointed, so
+    // Catalyst prunes the string token union out of the fusion agg.
+    val erecs = Entities.asRecords(Entities.fuse(records, labels, clusterSizeCap))
+      .localCheckpoint(true)
     val blocks = Blocking.strongBlocks(erecs)
       .unionByName(Blocking.tokenBlocks(erecs, tokenDfCap))
     val pairs = changedOnly match {
@@ -93,18 +92,10 @@ object Swoosh {
         val restricted = blocks.join(chgKeys, Seq("bkey"), "left_semi")
         Pairs.candidatePairs(restricted, pairCfg)
     }
-    // lean hydration: entity matching needs only the two value sets
-    val slim = erecs.select(col("conv_id"), col("token_ids"), col("strong_keys"))
-    val a = slim.toDF(slim.columns.map("a_" + _): _*)
-    val b = slim.toDF(slim.columns.map("b_" + _): _*)
-    val hyd = pairs
-      .join(a, col("a_id") === col("a_conv_id")).drop("a_conv_id")
-      .join(b, col("b_id") === col("b_conv_id")).drop("b_conv_id")
-    val edges = hyd.filter(
-        arrays_overlap(col("a_strong_keys"), col("b_strong_keys")) ||
-          Scoring.jaccard(col("a_token_ids"), col("b_token_ids")) >= jaccardThreshold)
+    val edges = Scoring.setFeatures(Pairs.hydrate(pairs, erecs, Scoring.SetColumns))
+      .filter(Scoring.matchRule("weak_strong", jaccardThreshold))
       .select(col("a_id"), col("b_id"))
-    val refined = ConnectedComponents.run(edges, entities.select(col("entity_id")))
+    val refined = ConnectedComponents.run(edges, erecs.select(col("conv_id")))
       .select(col("conv_id").as("old_id"), col("entity_id").as("new_id"))
     // LEFT join + coalesce: a record whose entity was excluded from the
     // round (over-cap fusion guard) keeps its old label instead of

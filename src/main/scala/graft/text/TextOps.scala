@@ -16,11 +16,10 @@ object TextOps {
 
   /** ASCII-lowercase tokenizer used for document ops — chosen (vs the
     * unicode one in Features) because the oracle SQL must express the
-    * identical regex in DuckDB's RE2 dialect.
+    * identical regex in DuckDB's RE2 dialect. Same splitter as
+    * `Features.tokenize`, so it stays inside whole-stage codegen.
     */
-  def docTokens(text: Column): Column =
-    filter(split(regexp_replace(lower(text), "[^a-z0-9]+", " "), " "),
-      t => length(t) > 0)
+  def docTokens(text: Column): Column = Features.words(text, "[^a-z0-9]+")
 
   /** Small per-language stopword lists for the language-ID heuristic. */
   val stopwords: Seq[(String, Seq[String])] = Seq(

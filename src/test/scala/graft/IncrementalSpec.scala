@@ -69,20 +69,18 @@ class IncrementalSpec extends AnyFunSuite {
     assert(capped == Map("n1" -> "n1"))
   }
 
-  test("attach rejects a supplied e_token_ids that is not array<bigint>, at plan time") {
+  test("a catalog whose token_ids is not array<bigint> is refused at plan time") {
     val base = recs(Seq(("c1", Seq("alpha", "beta"), Seq("T:a"))))
     val entities = Entities.fuse(base, Seq(("c1", "c1")).toDF("conv_id", "entity_id"))
     val newr = recs(Seq(("n1", Seq("alpha", "beta"), Seq.empty)))
-    // an index-ready catalog is accepted …
-    val ready = entities.withColumn("e_token_ids", Features.dictEncode(col("token_union")))
-    assert(Incremental.attach(newr, ready).as[(String, String)].collect().toMap ==
+    // the fused catalog is accepted …
+    assert(Incremental.attach(newr, entities).as[(String, String)].collect().toMap ==
       Map("n1" -> "c1"))
     // … a column of strings, or of 4-byte ids, under that name is not
-    for (wrong <- Seq(col("token_union"), transform(
-        Features.dictEncode(col("token_union")), x => x.cast("int")))) {
+    for (wrong <- Seq(col("token_union"), transform(col("token_ids"), x => x.cast("int")))) {
       val e = intercept[IllegalArgumentException](
-        Incremental.attach(newr, entities.withColumn("e_token_ids", wrong)))
-      assert(e.getMessage.contains("e_token_ids"), e.getMessage)
+        Incremental.attach(newr, entities.withColumn("token_ids", wrong)))
+      assert(e.getMessage.contains("token_ids"), e.getMessage)
     }
   }
 

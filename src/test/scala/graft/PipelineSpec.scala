@@ -236,7 +236,7 @@ class PipelineSpec extends AnyFunSuite {
     // the same rows and values as the full scored frame, projected
     val records = spark.read.parquet(s"$root/records/data")
     val pairs = spark.read.parquet(s"$root/pairs/data")
-    val full = Scoring.score(Pairs.hydrate(pairs, records)).select(scored.columns.map(col): _*)
+    val full = Scoring.score(Pairs.hydrate(pairs, records)).select(scored.columns.toIndexedSeq.map(col): _*)
     assert(scored.count() > 0)
     assert(scored.exceptAll(full).isEmpty && full.exceptAll(scored).isEmpty)
     deleteRecursively(Path.of(root))

@@ -116,10 +116,25 @@ class PlanAuditSpec extends AnyFunSuite {
         records.select(col("conv_id"), col("conv_id").as("entity_id")))
       val attached = Incremental.attach(records.limit(20), catalog)
       assert(!formatted(attached).contains("Cartesian"))
-      val tokTypes = PlanAudit.joinKeyTypes(
-        attached.queryExecution.executedPlan, "tok").distinct
-      assert(tokTypes == Seq(org.apache.spark.sql.types.LongType),
-        s"token-index join keys must be the 8-byte dictionary ids, got $tokTypes")
+      // the strong df cap, the token df cap and the candidate join
+      val keyTypes = PlanAudit.joinKeyTypes(attached.queryExecution.executedPlan, "bkey")
+      assert(keyTypes.size >= 6, s"bkey join key sides: ${keyTypes.size}")
+      assert(keyTypes.distinct == Seq(LongType),
+        s"attach candidate join keys (strong and token) must be 8-byte, got ${keyTypes.distinct}")
+    }
+  }
+
+  test("dedup shingling plan: the ShingleMinHash call sits in a codegen'd Project") {
+    withAqeOff {
+      // a range, not a local Seq: the optimizer would evaluate a
+      // projection over a local relation at planning time
+      val docs = spark.range(4).select(col("id").as("doc_id"),
+        concat(lit("The quick, brown fox jumps over doc "), col("id").cast("string")).as("text"))
+      val codegenProjects = formatted(graft.dedup.Dedup.withShingleBands(docs))
+        .split("\n\n").filter(_.matches("(?s)\\(\\d+\\) Project \\[codegen id : \\d+\\].*"))
+      assert(codegenProjects.exists(
+        _.contains("static_invoke(graft.functions.ShingleMinHash.signature(")),
+        "ShingleMinHash is not called inside a codegen'd Project of the dedup shingling plan")
     }
   }
 

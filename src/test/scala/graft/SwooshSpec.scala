@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Swoosh
+import graft.ops.{Features, Swoosh}
 
 class SwooshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  // records as Features.enrich shapes them: the token set and its ids
+  private def withIds(df: DataFrame): DataFrame =
+    df.withColumn("token_ids", Features.dictEncode(col("token_set")))
 
   // The canonical merge-enabled case (SURVEY.md §7.4 risk 1): C matches
   // neither A nor B alone (jac 2/6 = 0.33 < 0.45) but matches A∪B
@@ -16,7 +22,7 @@ class SwooshSpec extends AnyFunSuite {
     ("A", Seq("a", "b", "c", "d"), Seq("T:k1")),
     ("B", Seq("e", "f", "g", "h"), Seq("T:k1")),
     ("C", Seq("a", "b", "e", "f"), Seq.empty[String])
-  ).toDF("conv_id", "token_set", "strong_keys")
+  ).toDF("conv_id", "token_set", "strong_keys").transform(withIds)
 
   // strong-only initial clustering: {A,B} (shared key) + singleton C
   private def initial = Seq(
@@ -48,7 +54,7 @@ class SwooshSpec extends AnyFunSuite {
     ("B", Seq("e", "f", "g", "h"), Seq("T:k1")),
     ("C", Seq("a", "b", "c", "e", "f", "g", "p", "q"), Seq.empty[String]),
     ("G", Seq("a", "b", "d", "h", "p", "q"), Seq.empty[String])
-  ).toDF("conv_id", "token_set", "strong_keys")
+  ).toDF("conv_id", "token_set", "strong_keys").transform(withIds)
 
   private def chainInitial = Seq(
     ("A", "A"), ("B", "A"), ("C", "C"), ("G", "G")
@@ -112,7 +118,7 @@ class SwooshSpec extends AnyFunSuite {
     ("B", Seq("t1", "t2", "t3") ++ (1 to 10).map(i => s"b$i"), Seq("T:k1")),
     ("U", Seq("t1", "t2", "t3"), Seq.empty[String]),
     ("V", Seq("t1", "t2", "t3"), Seq.empty[String])
-  ).toDF("conv_id", "token_set", "strong_keys")
+  ).toDF("conv_id", "token_set", "strong_keys").transform(withIds)
 
   test("delta rounds enumerate unchanged×unchanged pairs in cap-transition blocks") {
     val cfg = graft.ops.Pairs.PairConfig(blockSizeCap = 3)
@@ -136,7 +142,7 @@ class SwooshSpec extends AnyFunSuite {
     val rs = (monster ++ Seq(
       ("A", Seq("a", "b", "c", "d"), Seq("T:k1")),
       ("B", Seq("e", "f", "g", "h"), Seq("T:k1"))
-    )).toDF("conv_id", "token_set", "strong_keys")
+    )).toDF("conv_id", "token_set", "strong_keys").transform(withIds)
     val labels = ((0 until 12).map(i => (f"m$i%02d", "m00"))
       ++ Seq(("A", "A"), ("B", "B"))).toDF("conv_id", "entity_id")
     val out = Swoosh.refine(rs, labels, clusterSizeCap = 10)

@@ -48,4 +48,17 @@ class TextOpsSpec extends AnyFunSuite {
     assert(fps(10L) != fps(12L))
     assert(fps(13L).nonEmpty)
   }
+
+  test("docTokens equals the split-then-filter formulation it replaced") {
+    val texts = Seq("", "   ", "--a--b--", "Grüße, señor — naïve café ÄÖÜ 東京 x1",
+      "tab\tand\nnew\r\nlines\t", " Lead and trail ", "a b")
+    val df = texts.toDF("text")
+    val old = filter(split(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "), " "),
+      t => length(t) > 0)
+    val got = df.select(col("text"), TextOps.docTokens(col("text")), old)
+      .as[(String, Seq[String], Seq[String])].collect()
+    assert(got.length == texts.size)
+    got.foreach { case (t, now, before) => assert(now == before, s"text: '$t'") }
+    assert(got.find(_._1 == "--a--b--").get._2 == Seq("a", "b"))
+  }
 }
