@@ -55,7 +55,9 @@ object Stages {
     })
 
   /** Node `name` of `dir`'s graph, as `pick` gets it, held in-JVM; counts
-    * and logs whether it resumed and the seconds it took itself.
+    * and logs whether it resumed, and the seconds it took itself and the
+    * generated classes it compiled (a node that compiles again in a warm
+    * JVM shows a codegen cache too small for the working set).
     */
   private def serve(name: String, s: SparkSession, dir: String)(
       pick: Pipeline.Graph => DataFrame): DataFrame =
@@ -65,7 +67,8 @@ object Stages {
       val resumed = g.resumed(name)
       (if (resumed) diskLoads else diskBuilds).incrementAndGet()
       val how = if (resumed) "disk cache hit" else f"built + cached in ${g.seconds(name)}%.1f s"
-      System.err.println(s"[stages] $name@${Tiers.tierFor(dir).name}: $how")
+      System.err.println(s"[stages] $name@${Tiers.tierFor(dir).name}: $how, " +
+        s"${g.compiles(name)} classes compiled")
       val df = built.persist(StorageLevel.MEMORY_AND_DISK)
       // materialize eagerly at the plan's own parallelism so a later
       // single-partition consumer (e.g. a repartition(1) write) can't be

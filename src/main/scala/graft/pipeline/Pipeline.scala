@@ -8,6 +8,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -104,11 +105,17 @@ object Pipeline {
         .map(j => s"$j:${listing(Paths.get(j))}").sorted.mkString("\n"))
     }
 
+  /** Generated classes Janino has compiled in this JVM so far: the
+    * misses of Spark's codegen cache, whose size build.sbt sets.
+    */
+  def compiledClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** A node or an input of a graph: its frame, whether it resumed, its
-    * own seconds, and the listings of the out-of-graph files it reads.
+    * own seconds and generated-class compiles, and the listings of the
+    * out-of-graph files it reads.
     */
   private final case class Built(df: DataFrame, resumed: Boolean, seconds: Double,
-      files: Set[String])
+      compiles: Long, files: Set[String])
 
   /** The stage graph of one run: each node is computed or resumed on
     * first access, after the nodes it reads, so a resumed node still
@@ -128,27 +135,33 @@ object Pipeline {
       */
     def seconds(name: String): Double = built.get(name).fold(0.0)(_.seconds)
 
+    /** Generated classes node `name` compiled while computing or resuming
+      * itself, counted like its `seconds`. Once a run's classes fit the
+      * codegen cache, a second run in the same JVM compiles none.
+      */
+    def compiles(name: String): Long = built.get(name).fold(0L)(_.compiles)
+
     /** The parquet data at `path`, a file outside the graph, as a node
       * input: a node that reads it, directly or through other nodes,
       * carries its `listing` in its fingerprint.
       */
     def input(path: String): DataFrame = built.getOrElseUpdate(path,
-      Built(spark.read.parquet(path), resumed = true, 0.0, Set(listing(Paths.get(path))))).df
+      Built(spark.read.parquet(path), resumed = true, 0.0, 0L, Set(listing(Paths.get(path))))).df
 
     /** Node `name`, computed or resumed once per graph. The nodes and
       * inputs it `reads` are passed by value, so they are forced first
-      * even when this node resumes without them, and its seconds are its
-      * own. Its fingerprint is the graph's, extended by the listings of
-      * the inputs it reads.
+      * even when this node resumes without them, and its seconds and
+      * compiles are its own. Its fingerprint is the graph's, extended by
+      * the listings of the inputs it reads.
       */
     def node(name: String, reads: DataFrame*)(compute: => DataFrame): DataFrame =
       built.getOrElseUpdate(name, {
         val files = reads.flatMap(r => built.values.find(_.df eq r).toSeq.flatMap(_.files)).toSet
         val nodeFp =
           if (files.isEmpty) fp else s"$fp-${Hashing.md5Hex(files.toSeq.sorted.mkString("\n"))}"
-        val t0 = System.nanoTime()
+        val (t0, c0) = (System.nanoTime(), compiledClasses)
         val (df, hit) = io.computeOrResume(spark, name, nodeFp, cfg.runId)(compute)
-        Built(df, hit, (System.nanoTime() - t0) / 1e9, files)
+        Built(df, hit, (System.nanoTime() - t0) / 1e9, compiledClasses - c0, files)
       }).df
 
     lazy val records: DataFrame = {

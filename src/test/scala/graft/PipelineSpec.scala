@@ -226,6 +226,24 @@ class PipelineSpec extends AnyFunSuite {
     deleteRecursively(Path.of(root))
   }
 
+  /** Regression guard: one run's generated classes fit Spark's codegen
+    * cache (`spark.sql.codegen.cache.maxEntries`, set for every forked
+    * JVM in build.sbt), so a second run reuses every class the first one
+    * compiled. With the default 100 entries each run evicts its own
+    * classes before their next use and compiles all of them again.
+    */
+  test("a second run in one JVM compiles no generated class") {
+    val transcripts = TranscriptGen.transcripts(spark, 40).toDF()
+    val roots = Seq(tmpDir("codegen-a"), tmpDir("codegen-b"))
+    val Seq((_, first), (compiled, second)) = roots.map { root =>
+      GeneratedClasses.count(Pipeline.run(spark, transcripts, Pipeline.Config(root))
+        .as[(String, String)].collect().sorted.toSeq)
+    }
+    assert(compiled == 0, s"the second cold run compiled $compiled generated classes")
+    assert(second == first)
+    roots.foreach(r => deleteRecursively(Path.of(r)))
+  }
+
   test("the scored checkpoint holds the pair, its features, score and decision only") {
     val transcripts = TranscriptGen.transcripts(spark, 40).toDF()
     val root = tmpDir("scored")
